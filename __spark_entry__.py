@@ -635,8 +635,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_docs": lambda s, d: chunking.chunk_documents(
             _t(s, d, "documents")
         ),
-        # connected components over the near-dup pair graph (iterative
-        # min-label propagation; oracle = DuckDB recursive CTE)
+        # connected components over the near-dup pair graph
+        # (dedup.hybrid_components; oracle = DuckDB recursive CTE)
         "dedup_clusters": lambda s, d: dedup.neardup_clusters(
             _t(s, d, "documents")
         ),

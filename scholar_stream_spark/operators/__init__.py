@@ -11,7 +11,7 @@ Each module groups one family from SURVEY.md §2:
 - ``similarity``  — cosine top-k ANN, brute-force + LSH-bucketed (§2.8)
 - ``textops``     — token counting, language id, quality, fingerprints
 - ``graph``       — iterative-numeric graph analytics (PageRank); the
-                    integer-label CC kernels stay with dedup
+                    integer-label CC primitive stays with dedup
 - ``multimodal``  — binary asset columns: Arrow-batched decode/feature
                     UDF plumbing, frame sampling, resize planning (§2.8)
 """

@@ -241,11 +241,10 @@ def dedup_cluster_sizes(
     corpus: ``sum(n_docs) = |documents|`` by construction.
 
     Scale shape: the shared ``neardup_clusters`` pipeline does the
-    heavy lifting (pair mining + min-label propagation, its own
-    checkpoint discipline); this rollup touches only the
-    duplicate-population-sized cluster table — distinct (cluster_id,
-    cluster_size) then a map-side-combined groupBy to ≤ max-size rows;
-    the singleton row is ONE narrow corpus count minus the clustered
+    heavy lifting (pair mining + `hybrid_components`); this rollup
+    touches only the duplicate-population-sized cluster table —
+    distinct (cluster_id, cluster_size) then a map-side-combined
+    groupBy to ≤ max-size rows; the singleton row is ONE narrow corpus count minus the clustered
     count. `doc_frac` is one IEEE division of exact integers.
 
     Output: (cluster_size, n_clusters, n_docs, doc_frac), size desc.
@@ -1651,12 +1650,19 @@ def remove_dup_paragraphs(
     )
 
 
-def _uf_component_members(edge_rows) -> dict:
+#: Pair graphs (undirected edges) smaller than this are collected and
+#: solved on the driver by `hybrid_components`; larger ones run the
+#: distributed star kernel. The one CC size cap — at 0 every graph,
+#: the empty one too, takes the distributed branch (tests force it so).
+CC_MAX_DRIVER_EDGES = 1_000_000
+
+
+def _driver_components(spark, edge_rows) -> DataFrame:
     """Union-find over a collected (small) (d1, d2) edge list →
-    {min-member root: [member nodes]} — the shared driver CC core.
-    Every union parents the larger root under the smaller, so each
-    component's final root is its minimum node id: identical labels to
-    the distributed min-label/star kernels (pinned)."""
+    (node, lbl, size), the `hybrid_components` contract. Every union
+    parents the larger root under the smaller, so each component's
+    final root is its minimum node id: identical labels to the star
+    kernel (pinned)."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -1677,76 +1683,12 @@ def _uf_component_members(edge_rows) -> dict:
     members: dict[int, list[int]] = {}
     for node in parent:
         members.setdefault(find(node), []).append(node)
-    return members
-
-
-def _clusters_driver_union_find(spark, edge_rows) -> DataFrame:
-    """Union-find over a collected (small) edge list — exact same
-    output contract as the distributed loop: (doc_id, min-member
-    cluster_id, cluster_size)."""
-    members = _uf_component_members(edge_rows)
     rows = [
         (node, root, len(nodes))
         for root, nodes in members.items()
         for node in nodes
     ]
-    return driver_rows_df(spark,
-        rows, "doc_id long, cluster_id long, cluster_size long"
-    )
-
-
-def _label_prop_components(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation over a symmetric (d1, d2) edge list →
-    (node, lbl). Rounds = graph diameter — right for the short-diameter
-    graphs near-dup banding produces (cliques + short chains)."""
-    labels = (
-        edges.select(F.col("d1").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("lbl"))
-        .localCheckpoint()
-    )
-    # Convergence sums are taken as DECIMAL(38,0), not LongType: node ids
-    # are arbitrary 64-bit values, so a LongType running sum overflows —
-    # silent wrap under ansi=false (a wrapped sum is still a usable
-    # checksum, but only by accident), ARITHMETIC_OVERFLOW under the
-    # Spark 4 ANSI default. 38 decimal digits hold 10^9 nodes x 2^63
-    # with ~10 digits of headroom.
-    _lbl_sum = F.sum(F.col("lbl").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_lbl_sum).first()[0]
-    converged = False
-    for _ in range(max_iter):
-        prop = (
-            edges.join(labels, edges["d1"] == labels["node"])
-            .groupBy(F.col("d2").alias("node2"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(prop, labels["node"] == prop["node2"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(_lbl_sum).first()[0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # Same loud-stop contract as the star kernel: falling out of
-        # the loop mid-propagation would return wrong labels silently
-        # (min labels only travel max_iter hops). Rounds needed =
-        # graph diameter — a cap hit means this graph wants the star
-        # kernel (O(log^2) rounds on any shape), not a bigger budget.
-        raise RuntimeError(
-            f"label propagation did not converge in {max_iter} rounds "
-            "(rounds = graph diameter); use kernel='star' for "
-            "long-diameter graphs"
-        )
-    return labels
+    return driver_rows_df(spark, rows, "node long, lbl long, size long")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -1785,12 +1727,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return pairs_u.union(pairs_v).distinct()
 
 
-def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Alternating large-star/small-star → (node, lbl): converges in
-    O(log²) rounds on ANY graph shape, vs diameter rounds for label
-    propagation — the swap-in for adversarial long-chain graphs at
-    100 TB. Same join-per-round plan shape; each round checkpoints so
-    iterative lineage can't grow."""
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Distributed connected components over a (d1, d2) long edge list
+    (either orientation; large-star symmetrizes) → (node, lbl) with
+    ``lbl`` = min member id of the component. Alternating
+    large-star/small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond") converges in O(log²) rounds on ANY graph
+    shape, long chains included; each round checkpoints so iterative
+    lineage can't grow."""
     cur = edges.localCheckpoint()
     prev_stat = None
     converged = False
@@ -1821,8 +1765,7 @@ def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
         prev_stat = stat
     if not converged:
         # A non-fixpoint edge set would make the star-forest extraction
-        # below emit WRONG labels silently — the exact failure mode this
-        # kernel exists to avoid in label-prop. Kiveris et al. bound
+        # below emit WRONG labels silently. Kiveris et al. bound
         # convergence at O(log^2 n) alternating rounds, so the default
         # max_iter=20 covers any graph this engine can hold; hitting the
         # cap means a bug or a pathological input, and either deserves a
@@ -1845,31 +1788,34 @@ def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
     return child_lbl.union(roots)
 
 
-CC_KERNELS = ("label-prop", "star")
+def hybrid_components(pairs: DataFrame) -> DataFrame:
+    """Connected components of a (d1, d2) long pair graph → (node,
+    lbl, size): ``lbl`` = min member id, ``size`` = component size,
+    one row per node that appears in a pair (singletons omitted).
 
-
-def connected_components(
-    edges: DataFrame, kernel: str = "label-prop", max_iter: int = 20
-) -> DataFrame:
-    """Distributed connected components over a symmetric (d1, d2) long
-    edge list → (node, lbl) with ``lbl`` = min member id of the
-    component. Two kernels, identical output (pinned by tests on a
-    1k-node chain): ``label-prop`` (diameter rounds — the default for
-    short-diameter near-dup graphs) and ``star`` (large-star/small-star,
-    O(log²) rounds on any shape — the scale-profile choice)."""
-    if kernel not in CC_KERNELS:
-        raise ValueError(f"unknown cc kernel: {kernel!r}")
-    if kernel == "star":
-        return _star_components(edges, max_iter)
-    return _label_prop_components(edges, max_iter)
+    Hybrid, like every production CC implementation: the pair graphs
+    fed here (near-dup bands, SNM match edges) are RARE by
+    construction, so below ``CC_MAX_DRIVER_EDGES`` a driver union-find
+    replaces ~2 Spark jobs per star round with one collect. The size
+    check IS the collect — limit(cap) bounds driver memory and runs
+    the pair pipeline exactly once in the common path. At the cap the
+    star kernel runs (it checkpoints its input, so the loop never
+    re-runs the pair pipeline) — same labels either way, pinned by
+    tests that force both branches."""
+    probe = pairs.limit(CC_MAX_DRIVER_EDGES).collect()
+    if len(probe) < CC_MAX_DRIVER_EDGES:
+        return _driver_components(pairs.sparkSession, probe)
+    return connected_components(pairs).select(
+        "node",
+        "lbl",
+        F.count(F.lit(1)).over(Window.partitionBy("lbl")).alias("size"),
+    )
 
 
 def neardup_clusters(
     documents: DataFrame,
     n: int = SHINGLE_N,
     threshold: float = JACCARD_THRESHOLD,
-    max_iter: int = 20,
-    max_driver_edges: int = 1_000_000,
     profile: str = "oracle",
     max_doc_freq: int | None | str = "auto",
 ) -> DataFrame:
@@ -1877,34 +1823,14 @@ def neardup_clusters(
     clusters: every document in a component gets ``cluster_id = min
     doc_id`` of the component, the deterministic survivor key (keep the
     cluster_id row, drop the rest — or keep the best-quality member,
-    the cluster is the unit either way).
-
-    Spark-first shape: the (rare-by-construction) pair list is
-    materialized ONCE with ``localCheckpoint`` — the iteration must not
-    re-run the shingle pipeline per round — then min-label propagation
-    runs over the symmetric edge list: each round joins labels to
-    edges, takes the per-node min of neighbor labels, and converges
-    when the (monotonically decreasing, integer) label sum stops
-    moving. Rounds = graph diameter; near-dup graphs are
-    short-diameter (cliques + short chains), so 3-5 rounds in
-    practice. Under ``profile="scale"`` the distributed path switches
-    to alternating large-star/small-star (Kiveris et al., "Connected
-    Components in MapReduce"), which converges in O(log²) rounds on
-    ANY graph shape — the guard for adversarial long-chain graphs at
-    100 TB (``connected_components(kernel="star")``; equal labels
-    pinned on a 1k chain). Each round's state is checkpointed:
-    iterative lineage otherwise grows unboundedly and re-executes
-    every prior round per action.
+    the cluster is the unit either way). The components come from
+    `hybrid_components`: a driver union-find while the pair graph is
+    small (the expected case), the large-star/small-star kernel from
+    ``CC_MAX_DRIVER_EDGES`` edges up.
 
     Output: (doc_id, cluster_id, cluster_size) for every document that
     appears in ≥1 near-dup pair (singletons are their own cluster
     trivially and are omitted, matching the pair list).
-
-    Below ``max_driver_edges`` the component computation runs as a
-    driver union-find over the collected edge list instead (identical
-    labels, a fraction of the scheduling cost) — the pair graph being
-    small is the EXPECTED case; the distributed loop is the escape
-    hatch for corpora where it isn't.
 
     ``profile="scale"`` turns the hot-shingle df cap on by default
     (``max_doc_freq="auto"`` → ``MAX_SHINGLE_DOC_FREQ``) so candidate
@@ -1919,34 +1845,8 @@ def neardup_clusters(
     pairs = ngram_jaccard_pairs(
         documents, n, threshold, max_doc_freq=cap
     ).select("d1", "d2")
-    edge_plan = pairs.union(
-        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    )
-
-    # Hybrid, like every production CC implementation: near-dup pair
-    # graphs are RARE by construction (banding exists to keep them so),
-    # and below the threshold a driver union-find replaces ~2 Spark
-    # jobs per propagation round with one collect of the edge list.
-    # The size check IS the collect — limit(max+1) bounds driver memory
-    # and runs the pair pipeline exactly once in the common path (a
-    # count-then-collect, or a checkpoint first, would execute it
-    # twice). Above the threshold the distributed loop runs over a
-    # checkpointed edge list — same labels either way (min member id
-    # per component), pinned by a test that forces both paths.
-    probe = edge_plan.limit(max_driver_edges + 1).collect()
-    if len(probe) <= max_driver_edges:
-        return _clusters_driver_union_find(documents.sparkSession, probe)
-    edges = edge_plan.localCheckpoint()  # iteration must not re-shingle
-    labels = connected_components(
-        edges,
-        kernel="star" if profile == "scale" else "label-prop",
-        max_iter=max_iter,
-    )
-    w = Window.partitionBy("lbl")
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("lbl").alias("cluster_id"),
-        F.count(F.lit(1)).over(w).alias("cluster_size"),
+    return hybrid_components(pairs).toDF(
+        "doc_id", "cluster_id", "cluster_size"
     )
 
 
@@ -3012,11 +2912,6 @@ def snm_candidate_pairs(
     ).select("name_a", "name_b", "lev", "parts_a", "parts_b")
 
 
-#: Driver union-find bound for the SNM match graph (the
-#: `neardup_clusters` hybrid threshold — same contract).
-SNM_MAX_DRIVER_EDGES = 1_000_000
-
-
 def _snm_validate(window: int, max_dist: int) -> None:
     # sequence(rk+1, rk+window) would silently generate a DESCENDING
     # range for window < 1 (Spark's sequence reverses) — refuse loudly
@@ -3103,15 +2998,13 @@ def snm_entity_clusters(
     `dedup_clusters`) and the merged part count.
 
     Scale shape: the spine rank doubles as the integer node id, so
-    the component kernel is the SHARED `connected_components`
-    machinery — ALWAYS the large/small-star kernel (O(log²) rounds on
-    ANY diameter), both profiles: SNM edit-distance chains are
-    precisely the long-diameter shape where bounded-round label
-    propagation would return silently unconverged labels and split an
-    entity, so `profile` governs only the spine ranking;
-    the edge list is SNM-bounded (≤ |spine|·window before the lev
-    gate) and checkpointed once; membership maps back to names by ONE
-    rank equi-join; the final rollup is cluster-count sized.
+    the components come from the SHARED `hybrid_components` (driver
+    union-find, or the large/small-star kernel above the cap — both
+    exact on the long-diameter chains SNM edit distance produces);
+    `profile` governs only the spine ranking. The edge list is
+    SNM-bounded (≤ |spine|·window before the lev gate); membership
+    maps back to names by ONE rank equi-join; the final rollup is
+    cluster-count sized.
     Singleton names (no match edge) are omitted — the pair list's
     contract, same as `neardup_clusters`.
 
@@ -3139,35 +3032,11 @@ def _snm_members(
         F.col("rk_a").cast("long").alias("d1"),
         F.col("rk_b").cast("long").alias("d2"),
     )
-    edge_plan = pairs.union(
-        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    )
-    # Hybrid, the `neardup_clusters` discipline (r17 opt): the
-    # lev-gated match graph is rare by construction (≤ |spine|·window
-    # candidates, few survive the gate), so below the threshold a
-    # driver union-find replaces the multi-round distributed kernel —
-    # identical min-member labels, and the probe collect IS the one
-    # execution of the pair pipeline. A long edit-distance chain is no
-    # hazard to union-find (exact at any diameter).
-    probe = edge_plan.limit(SNM_MAX_DRIVER_EDGES + 1).collect()
-    if len(probe) <= SNM_MAX_DRIVER_EDGES:
-        spark = part.sparkSession
-        rows = [
-            (node, root)
-            for root, nodes in _uf_component_members(probe).items()
-            for node in nodes
-        ]
-        comp = driver_rows_df(spark, rows, "node long, lbl long")
-    else:
-        edges = edge_plan.localCheckpoint(eager=False)
-        # ALWAYS the large/small-star kernel, both profiles: SNM edit-
-        # distance chains are exactly the long-diameter shape
-        # label-prop is not built for (a chain of >max_iter names one
-        # edit apart would return silently UNCONVERGED labels,
-        # splitting one entity — a review finding); star converges in
-        # O(log²) rounds on any diameter, so the profile switch
-        # governs only the spine ranking.
-        comp = connected_components(edges, kernel="star")
+    # the lev-gated match graph is rare by construction (≤ |spine|·window
+    # candidates, few survive the gate); union-find and the star kernel
+    # are both exact at any diameter, so a long edit-distance chain
+    # cannot split an entity on either branch
+    comp = hybrid_components(pairs).select("node", "lbl")
     return comp.join(
         ranked.select(
             F.col("rk").cast("long").alias("node"),

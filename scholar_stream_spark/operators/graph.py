@@ -1,12 +1,13 @@
 """Graph analytics over DataFrame edge lists (SURVEY §2.8 extension).
 
-Connected components live in ``operators/dedup.py`` (they grew out of
-the near-dup cluster step and share its kernels); this module holds the
-ITERATIVE-NUMERIC graph family — fixpoint computations over float
-state, where the engineering constraints differ from CC's integer
-labels: no exact convergence checksum is possible (floats drift), so
-rounds are a FIXED budget, and every iteration must checkpoint or the
-lineage re-executes all prior rounds per action.
+Connected components live in ``operators/dedup.py``
+(``hybrid_components``, grown out of the near-dup cluster step); this
+module holds the ITERATIVE-NUMERIC graph family — fixpoint
+computations over float state, where the engineering constraints
+differ from CC's integer labels: no exact convergence checksum is
+possible (floats drift), so rounds are a FIXED budget, and every
+iteration must checkpoint or the lineage re-executes all prior rounds
+per action.
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ def pagerank(
     Brin-Page random surfer with edge-weight-proportional transitions:
     ``pr ← (1−d)/n + d·(Pᵀpr + dangling_mass/n)``, run for a FIXED
     ``n_iter`` rounds (float fixpoints have no exact cross-engine
-    convergence test — the CC kernels' checksum trick does not carry
+    convergence test — the CC kernel's checksum trick does not carry
     over, so the round budget is explicit and deterministic).
 
     Semantics: transition probability out of ``src`` is
@@ -65,7 +66,7 @@ def pagerank(
     equi-join + a map-side-combined groupBy(dst), a LEFT join back to
     the node spine (nodes with no in-edges keep the teleport floor),
     and two 1-row aggregates (dangling mass, and nothing else) — the
-    same bounded-driver-state contract as the CC kernels; rank state
+    same bounded-driver-state contract as the CC primitive; rank state
     checkpoints per round so lineage cannot grow. n (node count) is
     one driver scalar.
 
@@ -1163,7 +1164,7 @@ def _assort_moments_distributed(und: DataFrame) -> DataFrame:
 #: k-core round budget: coreness h-index iteration converges in at
 #: most the graph's degeneracy-ordering depth — tiny for business
 #: graphs; the cap only exists so a pathological input fails LOUDLY
-#: (the CC kernels' round-cap discipline) instead of looping.
+#: (the CC kernel's round-cap discipline) instead of looping.
 KCORE_MAX_ITER = 64
 
 
@@ -1188,7 +1189,7 @@ def trade_kcore(
     and the fixpoint is exactly the coreness, so convergence is
     EXACT: the integer value-sum is strictly decreasing until the
     fixpoint, and one unchanged sum proves global convergence (the CC
-    kernels' checksum discipline — no float residual, unlike
+    kernel's checksum discipline — no float residual, unlike
     `pagerank`). Raises loudly at the round cap.
 
     Scale shape: adjacency computed once and checkpointed; each round
@@ -1257,8 +1258,8 @@ def kcore(
     """Generic coreness (k-core number) over an undirected (a < b)
     edge list — the kernel behind `trade_kcore` and `user_kcore`.
 
-    Hybrid, like the dedup module's CC (`neardup_clusters` rationale,
-    applied after r17 measurement — the distributed fixpoint spent
+    Hybrid, like the dedup module's `hybrid_components` (applied
+    after r17 measurement — the distributed fixpoint spent
     10.8 s on a 142k-edge graph the driver peels in milliseconds,
     ~2 Spark jobs per round × a data-dependent round count): below
     ``max_driver_edges`` the edge list is collected ONCE (the

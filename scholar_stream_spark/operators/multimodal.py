@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from scholar_stream_spark.operators.dedup import hybrid_components
 from scholar_stream_spark.plans.partitioning import scale_out
 
 #: Deterministic media-type assignment for the synthesized asset table.
@@ -536,9 +537,6 @@ def _image_neardup_pairs_core(
 def image_neardup_clusters(
     documents: DataFrame,
     max_hamming: int = DHASH_HAMMING_MAX,
-    max_driver_edges: int = 1_000_000,
-    profile: str = "oracle",
-    max_iter: int = 20,
     sort: bool = True,
 ) -> DataFrame:
     """Near-duplicate IMAGE clusters: connected components over the
@@ -548,72 +546,19 @@ def image_neardup_clusters(
     binary modality; a re-encoded image family collapses to ONE
     training example, not k).
 
-    Spark-first shape: delegates to the dedup module's hybrid CC
-    kernels verbatim (`dedup.neardup_clusters` rationale) — pair
-    graphs are RARE by construction, so below ``max_driver_edges`` a
-    driver union-find replaces the distributed loop (the limit(n+1)
-    probe IS the size check, one pipeline execution); above it,
-    min-label propagation (``profile="oracle"``) or large-star/
-    small-star (``"scale"`` — O(log²) rounds on any shape) over a
-    checkpointed symmetric edge list.
+    Spark-first shape: the dedup module's `hybrid_components` —
+    pair graphs are RARE by construction, so below its driver cap a
+    union-find over the one probe collect replaces the distributed
+    loop; from the cap up, the large-star/small-star kernel (O(log²)
+    rounds on any shape).
 
     Output: (asset_id, cluster_id, cluster_size) for every image in
     ≥1 near-dup pair (singletons omitted, matching the pair list).
     """
-    if profile not in ("oracle", "scale"):
-        raise ValueError(
-            f"image_neardup_clusters: unknown profile {profile!r}"
-        )
-    return _clusters_from_pair_keys(
-        documents.sparkSession,
-        _image_neardup_pairs_core(documents, max_hamming),
-        max_driver_edges=max_driver_edges,
-        profile=profile,
-        max_iter=max_iter,
-        sort=sort,
-    )
-
-
-def _clusters_from_pair_keys(
-    spark,
-    pairs: DataFrame,
-    max_driver_edges: int,
-    profile: str,
-    max_iter: int,
-    sort: bool = True,
-) -> DataFrame:
-    """Shared hybrid connected-components step over any
-    (asset_a, asset_b) near-dup pair table (the dedup module's CC
-    kernels, the limit(n+1)-probe driver/distributed split)."""
-    from scholar_stream_spark.operators import dedup
-
-    pairs = pairs.select(
-        F.col("asset_a").alias("d1"), F.col("asset_b").alias("d2")
-    )
-    edge_plan = pairs.union(
-        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    )
-    probe = edge_plan.limit(max_driver_edges + 1).collect()
-    if len(probe) <= max_driver_edges:
-        out = dedup._clusters_driver_union_find(spark, probe)
-    else:
-        edges = edge_plan.localCheckpoint()
-        labels = dedup.connected_components(
-            edges,
-            kernel="star" if profile == "scale" else "label-prop",
-            max_iter=max_iter,
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("lbl")
-        out = labels.select(
-            F.col("node").alias("doc_id"),
-            F.col("lbl").alias("cluster_id"),
-            F.count(F.lit(1)).over(w).alias("cluster_size"),
-        )
-    out = out.select(
-        F.col("doc_id").alias("asset_id"), "cluster_id", "cluster_size"
-    )
+    pairs = _image_neardup_pairs_core(documents, max_hamming)
+    out = hybrid_components(
+        pairs.select("asset_a", "asset_b").toDF("d1", "d2")
+    ).toDF("asset_id", "cluster_id", "cluster_size")
     return out.orderBy("asset_id") if sort else out
 
 
@@ -1195,9 +1140,6 @@ def video_neardup_clusters(
     min_jaccard_pct: int = VIDEO_JACCARD_MIN_PCT,
     max_frames: int = FRAME_SAMPLE_MAX,
     max_sig_freq: int | None = VIDEO_SIG_FREQ_CAP,
-    max_driver_edges: int = 1_000_000,
-    profile: str = "oracle",
-    max_iter: int = 20,
     sort: bool = True,
 ) -> DataFrame:
     """Near-duplicate VIDEO clusters: connected components over the
@@ -1210,20 +1152,13 @@ def video_neardup_clusters(
     (``sort=False`` skips the presentation sort for internal
     consumers that re-partition next — survivors anti-join, funnel
     aggregate)."""
-    if profile not in ("oracle", "scale"):
-        raise ValueError(
-            f"video_neardup_clusters: unknown profile {profile!r}"
-        )
-    return _clusters_from_pair_keys(
-        documents.sparkSession,
-        _video_neardup_pairs_core(
-            documents, min_jaccard_pct, max_frames, max_sig_freq
-        ),
-        max_driver_edges=max_driver_edges,
-        profile=profile,
-        max_iter=max_iter,
-        sort=sort,
+    pairs = _video_neardup_pairs_core(
+        documents, min_jaccard_pct, max_frames, max_sig_freq
     )
+    out = hybrid_components(
+        pairs.select("asset_a", "asset_b").toDF("d1", "d2")
+    ).toDF("asset_id", "cluster_id", "cluster_size")
+    return out.orderBy("asset_id") if sort else out
 
 
 def video_dedup_survivors(
@@ -1251,29 +1186,19 @@ def audio_neardup_clusters(
     min_jaccard_pct: int = VIDEO_JACCARD_MIN_PCT,
     max_windows: int = AUDIO_WINDOW_MAX,
     max_sig_freq: int | None = AUDIO_SIG_FREQ_CAP,
-    max_driver_edges: int = 1_000_000,
-    profile: str = "oracle",
-    max_iter: int = 20,
     sort: bool = True,
 ) -> DataFrame:
     """Near-duplicate AUDIO clusters over the window-set-Jaccard pair
     graph (capped default — oracle-exact). Output: (asset_id,
     cluster_id, cluster_size), asset asc (``sort=False`` for internal
     consumers, as on the video twin)."""
-    if profile not in ("oracle", "scale"):
-        raise ValueError(
-            f"audio_neardup_clusters: unknown profile {profile!r}"
-        )
-    return _clusters_from_pair_keys(
-        documents.sparkSession,
-        _audio_neardup_pairs_core(
-            documents, min_jaccard_pct, max_windows, max_sig_freq
-        ),
-        max_driver_edges=max_driver_edges,
-        profile=profile,
-        max_iter=max_iter,
-        sort=sort,
+    pairs = _audio_neardup_pairs_core(
+        documents, min_jaccard_pct, max_windows, max_sig_freq
     )
+    out = hybrid_components(
+        pairs.select("asset_a", "asset_b").toDF("d1", "d2")
+    ).toDF("asset_id", "cluster_id", "cluster_size")
+    return out.orderBy("asset_id") if sort else out
 
 
 def audio_dedup_survivors(

@@ -91,47 +91,37 @@ def driver_rows_df(spark, rows, schema, rows_per_slice: int = _ROWS_PER_SLICE):
     still parallelizes; at 1 slice per 64k rows the driver-CC cluster
     maps (the largest caller, probe-bounded ~100k rows) get 2.
 
-    Fast path (r17 opt, guide §6 "Arrow for driver transfers"): the
+    Arrow transfer (r17 opt, guide §6 "Arrow for driver transfers"): the
     rows are packed into ONE pyarrow Table with the Arrow schema
     derived from the declared Spark schema — no per-row pickling, no
     Python-worker deserialization downstream, and exact types by
     construction (int64 stays int64; no pandas float round-trip).
     Measured: 1500-row noop 0.23 → 0.10 s, coalesce(1) parquet write
     0.36 → 0.24 s, values/schema/NULLs/decimals/timestamps verified
-    identical. Any conversion surprise (exotic nested type, Row-like
-    values pyarrow rejects) falls back to the sliced-parallelize path
-    — same values, just slower.
+    identical. A row pyarrow cannot convert to the declared schema
+    raises.
     """
-    data = rows if isinstance(rows, list) else list(rows)
-    try:
-        import pyarrow as pa  # noqa: PLC0415
-        from pyspark.sql.pandas.types import (  # noqa: PLC0415
-            to_arrow_schema,
-        )
-        from pyspark.sql.types import (  # noqa: PLC0415
-            StructType,
-            _parse_datatype_string,
-        )
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import (  # noqa: PLC0415
+        StructType,
+        _parse_datatype_string,
+    )
 
-        st = (
-            schema
-            if isinstance(schema, StructType)
-            else _parse_datatype_string(schema)
-        )
-        arrow_schema = to_arrow_schema(st)
-        arrays = [
-            pa.array([r[i] for r in data], type=f.type)
-            for i, f in enumerate(arrow_schema)
-        ]
-        df = spark.createDataFrame(
-            pa.Table.from_arrays(arrays, schema=arrow_schema)
-        )
-        # the Arrow conversion still chunks defaultParallelism ways;
-        # a narrow coalesce restores the size-scaled slice contract
-        n_slices = max(1, math.ceil(len(data) / rows_per_slice))
-        return df.coalesce(n_slices)
-    except Exception:  # noqa: BLE001 — fall back to the row path
-        n_slices = max(1, math.ceil(len(data) / rows_per_slice))
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(data, n_slices), schema
-        )
+    data = rows if isinstance(rows, list) else list(rows)
+    st = (
+        schema
+        if isinstance(schema, StructType)
+        else _parse_datatype_string(schema)
+    )
+    arrow_schema = to_arrow_schema(st)
+    arrays = [
+        pa.array([r[i] for r in data], type=f.type)
+        for i, f in enumerate(arrow_schema)
+    ]
+    df = spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema)
+    )
+    # the Arrow conversion still chunks defaultParallelism ways; a
+    # narrow coalesce restores the size-scaled slice contract
+    return df.coalesce(max(1, math.ceil(len(data) / rows_per_slice)))

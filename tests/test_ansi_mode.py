@@ -100,48 +100,43 @@ def test_minhash_signatures_ansi(ansi_on, docs):
 
 
 def _chain_edges(spark, n: int, base: int):
-    """Symmetric chain base..base+n-1 — needs ~diameter label-prop rounds
-    and >2 star rounds, so BOTH kernels' convergence checksums actually
-    execute multiple iterations. ``base`` near 2^62 makes a LongType sum
-    of ids/hashes overflow within a handful of rows, which is exactly the
-    class the DECIMAL(38,0) casts exist for."""
+    """Symmetric chain base..base+n-1 — needs >2 star rounds, so the
+    kernel's convergence checksum actually executes multiple
+    iterations. ``base`` near 2^62 makes a LongType sum of ids/hashes
+    overflow within a handful of rows, which is exactly the class the
+    DECIMAL(38,0) cast exists for."""
     rows = [(base + i, base + i + 1) for i in range(n - 1)]
     rows += [(b, a) for a, b in rows]
     return spark.createDataFrame(rows, "d1 long, d2 long")
 
 
-@pytest.mark.parametrize("kernel", dedup.CC_KERNELS)
+@pytest.mark.parametrize("kernel", ["star"])
 def test_cc_kernels_distributed_loop_under_ansi(ansi_on, kernel):
     """The CORRECTNESS_r14 hole: no oracle entry had ever executed the
     distributed star loop, and its xxhash64 convergence checksum summed
     as LongType threw ARITHMETIC_OVERFLOW under the driver's ANSI-on
-    Spark 4 session (dedup.py star kernel; same latent class in
-    label-prop's sum of 64-bit node ids). Drive BOTH kernels directly on
-    a multi-round edge set with ids near 2^62 — overflow-certain for any
-    LongType running sum — and pin the labels."""
+    Spark 4 session. Drive the kernel directly on a multi-round edge
+    set with ids near 2^62 — overflow-certain for any LongType running
+    sum — and pin the labels."""
     base = 2**62 + 7
     edges = _chain_edges(ansi_on, 40, base)
-    # label-prop needs diameter (39) rounds + 1 detection round; star
-    # converges well inside the default 20.
     got = {
         r["node"]: r["lbl"]
-        for r in dedup.connected_components(
-            edges, kernel=kernel, max_iter=64
-        ).collect()
+        for r in dedup.connected_components(edges).collect()
     }
     assert got == {base + i: base for i in range(40)}
 
 
 def test_star_kernel_raises_loudly_at_round_cap(spark):
-    """_star_components must NOT fall out of its loop silently: a
+    """The star kernel must NOT fall out of its loop silently: a
     non-fixpoint edge set makes the star-forest extraction emit wrong
     labels. On a 2^10-node chain, one alternated round cannot reach the
     fixpoint-confirmation state (detection needs a no-change round), so
     max_iter=1 must raise, and the default cap must succeed."""
     edges = _chain_edges(spark, 1024, 10_000)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(edges, kernel="star", max_iter=1)
-    ok = dedup.connected_components(edges, kernel="star")
+        dedup.connected_components(edges, max_iter=1)
+    ok = dedup.connected_components(edges)
     assert ok.select(F.countDistinct("lbl")).first()[0] == 1
 
 

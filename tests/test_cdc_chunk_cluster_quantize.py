@@ -187,10 +187,13 @@ def test_neardup_clusters_chain_transitivity(spark):
     assert 99 not in out  # singleton: no pairs, no row
 
 
-def test_neardup_clusters_driver_and_distributed_paths_agree(spark):
+def test_neardup_clusters_driver_and_distributed_paths_agree(
+    spark, monkeypatch
+):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     fast = dedup.neardup_clusters(docs)  # driver union-find path
-    slow = dedup.neardup_clusters(docs, max_driver_edges=0)  # forced loop
+    monkeypatch.setattr(dedup, "CC_MAX_DRIVER_EDGES", 0)
+    slow = dedup.neardup_clusters(docs)  # forced star kernel
     assert sorted(map(tuple, fast.collect())) == sorted(
         map(tuple, slow.collect())
     )

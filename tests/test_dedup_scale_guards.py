@@ -401,7 +401,8 @@ def test_simhash_packed_lanes_match_unpacked_counts(spark):
 
 def _chain_edges(spark, n=1000):
     """Symmetric edge list of a path graph 0-1-2-...-(n-1): diameter
-    n-1, the adversarial shape for per-hop label propagation."""
+    n-1, the adversarial shape for any kernel whose rounds grow with
+    the diameter."""
     rows = [(i, i + 1) for i in range(n - 1)]
     rows += [(b, a) for a, b in rows]
     return spark.createDataFrame(rows, "d1 long, d2 long")
@@ -413,28 +414,15 @@ def test_star_kernel_matches_union_find_on_1k_chain(spark):
     edges = _chain_edges(spark, 1000)
     star = {
         r["node"]: r["lbl"]
-        for r in dedup.connected_components(edges, kernel="star").collect()
+        for r in dedup.connected_components(edges).collect()
     }
     uf = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup._clusters_driver_union_find(
-            spark, edges.collect()
-        ).collect()
+        r["node"]: r["lbl"]
+        for r in dedup._driver_components(spark, edges.collect()).collect()
     }
     assert star == uf
     assert set(star.values()) == {0}  # one component, min-id label
     assert len(star) == 1000
-
-
-def test_label_prop_needs_diameter_rounds_on_chain(spark):
-    """Documents WHY star is the scale kernel: per-hop min propagation
-    cannot finish a 1k chain in 20 rounds (labels only travel 20 hops),
-    while the star kernel above does. Since r15 the cap hit is a LOUD
-    RuntimeError, not silently-wrong labels — the same non-convergence
-    contract as the star kernel."""
-    edges = _chain_edges(spark, 1000)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(edges, kernel="label-prop", max_iter=20)
 
 
 def test_star_kernel_on_disjoint_components(spark):
@@ -448,41 +436,13 @@ def test_star_kernel_on_disjoint_components(spark):
     edges = spark.createDataFrame(rows, "d1 long, d2 long")
     got = {
         r["node"]: r["lbl"]
-        for r in dedup.connected_components(edges, kernel="star").collect()
+        for r in dedup.connected_components(edges).collect()
     }
     assert got == {
         **{10 + i: 10 for i in range(4)},
         **{20 + i: 20 for i in range(4)},
         100: 100, 101: 100,
     }
-
-
-def test_neardup_clusters_scale_profile_uses_star_kernel(spark):
-    """Forcing the distributed path: the scale profile (star kernel)
-    and the oracle profile (label-prop) produce identical clusters on
-    the real near-dup graph (df cap pinned off to isolate the kernel)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = sorted(
-        (r["doc_id"], r["cluster_id"], r["cluster_size"])
-        for r in dedup.neardup_clusters(
-            docs, max_driver_edges=0, profile="oracle"
-        ).collect()
-    )
-    star = sorted(
-        (r["doc_id"], r["cluster_id"], r["cluster_size"])
-        for r in dedup.neardup_clusters(
-            docs, max_driver_edges=0, profile="scale", max_doc_freq=None
-        ).collect()
-    )
-    assert base == star and len(base) > 0
-
-
-def test_connected_components_rejects_unknown_kernel(spark):
-    import pytest as _pytest
-
-    edges = _chain_edges(spark, 4)
-    with _pytest.raises(ValueError, match="unknown cc kernel"):
-        dedup.connected_components(edges, kernel="nope")
 
 
 def test_incremental_neardup_indexed_matches_recompute(spark, tmp_path):

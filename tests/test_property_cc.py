@@ -1,17 +1,20 @@
-"""Property-based check of the two distributed connected-components
-kernels against a Python union-find reference.
+"""Property-based check of both branches of ``dedup.hybrid_components``
+— the driver union-find and the distributed star kernel — against a
+Python union-find reference.
 
 The star kernel's correctness hinges on the large-star/small-star emit
-rules and the convergence check; label propagation's on its per-hop min
-and the stop condition. Hypothesis drives adversarial small graphs —
-chains, cliques-with-bridges, self-contained stars, duplicate and
-reversed edges — and both kernels must produce the exact union-find
-labels (min member id per component) for every node that appears in an
-edge.
+rules and the convergence check. Hypothesis drives adversarial small
+graphs — chains, cliques-with-bridges, self-contained stars, duplicate
+and reversed edges — and both branches must produce the exact
+union-find labels (min member id per component) and component sizes
+for every node that appears in an edge.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -48,17 +51,22 @@ def _reference_labels(edges: list[tuple[int, int]]) -> dict[int, int]:
 )
 @given(st.lists(edge, min_size=1, max_size=25))
 def test_cc_kernels_match_union_find(spark, edges):
-    # drop self-loops (a doc is trivially its own cluster; the pair
-    # generators never emit them) and symmetrize like neardup_clusters
+    # drop self-loops: a doc is trivially its own cluster and the pair
+    # generators never emit them
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:
         return
-    sym = edges + [(b, a) for a, b in edges]
-    df = spark.createDataFrame(sym, "d1 long, d2 long")
+    df = spark.createDataFrame(edges, "d1 long, d2 long")
     want = _reference_labels(edges)
-    for kernel in dedup.CC_KERNELS:
-        got = {
-            r["node"]: r["lbl"]
-            for r in dedup.connected_components(df, kernel=kernel).collect()
-        }
-        assert got == want, (kernel, edges)
+    sizes = Counter(want.values())
+    for cap in (dedup.CC_MAX_DRIVER_EDGES, 0):  # driver, then star
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "CC_MAX_DRIVER_EDGES", cap)
+            got = {
+                r["node"]: (r["lbl"], r["size"])
+                for r in dedup.hybrid_components(df).collect()
+            }
+        assert got == {n: (lbl, sizes[lbl]) for n, lbl in want.items()}, (
+            cap,
+            edges,
+        )

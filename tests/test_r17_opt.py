@@ -529,7 +529,7 @@ def test_snm_members_hybrid_paths_identical(spark, monkeypatch):
     part = spark.createDataFrame(rows, "p_name string")
     fast = dedup.snm_entity_clusters(part).collect()
     fast_map = dedup.snm_survivor_map(part).collect()
-    monkeypatch.setattr(dedup, "SNM_MAX_DRIVER_EDGES", 0)
+    monkeypatch.setattr(dedup, "CC_MAX_DRIVER_EDGES", 0)
     slow = dedup.snm_entity_clusters(part).collect()
     slow_map = dedup.snm_survivor_map(part).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
