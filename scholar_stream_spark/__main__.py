@@ -36,7 +36,6 @@ import json
 import os
 import sys
 import tempfile
-import uuid
 
 from scholar_stream_spark.sources.rest import MAX_PER_PAGE
 from scholar_stream_spark.plans.partitioning import driver_rows_df
@@ -242,6 +241,7 @@ def main(argv: list[str] | None = None) -> int:
     from scholar_stream_spark import get_spark
     from scholar_stream_spark.sources import rest
     from scholar_stream_spark.streaming.accounting import IngestAccounting
+    from scholar_stream_spark.streaming.pipeline import landing_hook
 
     spark = get_spark(
         app_name="scholar-stream-producer",
@@ -267,49 +267,15 @@ def main(argv: list[str] | None = None) -> int:
     stream = spark.readStream.format("paginated_rest").options(**opts).load()
     wire = _wire(stream)
 
-    def land(batch_df, batch_id: int) -> None:
-        from scholar_stream_spark.sources.raw_landing import (
-            split_dead_letters,
-            with_delivery_metadata,
-        )
-
-        batch_df.persist()
-        try:
-            landing = with_delivery_metadata(
-                batch_df, batch_id=f"{batch_id}-{uuid.uuid4()}"
-            )
-            good, dead = split_dead_letters(landing)
-            good.write.mode("append").partitionBy("land_date").parquet(
-                args.raw_path
-            )
-            # count first, sample second: if max_error_samples were 0 a
-            # sample-gated count would silently never see dead letters
-            # (matches start_ingest's ordering in streaming/pipeline.py)
-            n_dead = dead.count()
-            dead_sample = (
-                dead.limit(acct.max_error_samples).collect() if n_dead else []
-            )
-            if args.errors_path and n_dead:
-                dead.write.mode("append").partitionBy("land_date").parquet(
-                    args.errors_path
-                )
-            acct.record(
-                batch_id=f"{batch_id}",
-                batch_seq=batch_id,
-                n_input=batch_df.count(),
-                n_dead=n_dead,
-                error_samples=[r["payload"] for r in dead_sample],
-            )
-        finally:
-            batch_df.unpersist()
-
     checkpoint = args.checkpoint or tempfile.mkdtemp(prefix="producer-ckpt-")
     # Python micro-batch sources don't support Trigger.AvailableNow (it
     # silently degrades to ONE batch); drain the cursor explicitly —
     # processAllAvailable blocks until the source stops advancing its
     # offset, i.e. the paginated pull is exhausted.
     q = (
-        wire.writeStream.foreachBatch(land)
+        wire.writeStream.foreachBatch(
+            landing_hook(args.raw_path, errors_path=args.errors_path, accounting=acct)
+        )
         .option("checkpointLocation", checkpoint)
         .trigger(processingTime="0 seconds")
         .start()

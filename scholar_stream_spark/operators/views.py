@@ -3,23 +3,30 @@
 The reference defines these as two Snowflake views over a VARIANT landing
 table (``sql/04_views_curated.sql``). Here they are DataFrame builders:
 
-- ``build_vw_works``   — V1-V9: parse-once JSON shredding, safe casts,
+- ``shred``            — V2-V7: the typed columns of one envelope, from its
+  parsed payload and delivery metadata.
+- ``build_vw_works``   — V1-V9: projection of the typed columns,
   landed-time coalesce, latency derivation.
 - ``build_vw_latency`` — V10-V12: global KPI aggregate over a relative
   time window.
 
 Design notes (scale):
 
-- **Parse JSON once** (V2-V4): the reference extracts 7 paths from the
-  same VARIANT per row. Naive ``get_json_object``×7 would parse the
-  payload 7 times; we ``from_json`` into a struct once and use struct
-  field access, which after Catalyst's nested-schema pruning reads only
-  the needed leaves.
+- **Shred once, at landing** (V2-V7): Snowflake keeps VARIANT
+  sub-columns in columnar form. Here engine landing
+  (``sources/raw_landing.py``) writes ``shred``'s typed columns next to
+  the verbatim payload and metadata, reusing the ``try_parse_json`` value
+  of its dead-letter probe, so a dashboard poll scans columns instead of
+  re-parsing every payload. An input with only payload and metadata
+  (a stream, a test fixture, bronze landed before the typed columns) is
+  shredded by ``build_vw_works`` with the same function, so the semantics
+  have one definition.
 - **Injectable clock**: ``CURRENT_TIMESTAMP()`` appears in the landed-ts
   coalesce and the window bounds (reference
   ``sql/04_views_curated.sql:20-24,54-60``) — nondeterministic by design.
   Every builder takes ``now=None`` (→ ``current_timestamp()``) so tests
-  and oracle comparisons can pin the clock (SURVEY §5.2 / §7.3).
+  and oracle comparisons can pin the clock (SURVEY §5.2 / §7.3). The clock
+  is read-time only: it never reaches the typed columns.
 - Views compose (V1): ``vw_latency`` is built *over* ``vw_works``;
   registered as temp views they inline into one logical plan, so the
   filter in the latency view pushes down into the works scan.
@@ -30,11 +37,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from scholar_stream_spark.schemas import ENVELOPE_SCHEMA, METADATA_SCHEMA
 
-
-def try_to_timestamp(col: Column) -> Column:
-    """V5 — safe timestamp parse: NULL on malformed, never an error.
+def try_to_timestamp(expr: str) -> str:
+    """V5 — safe timestamp parse of the SQL expression ``expr``: NULL on
+    malformed, never an error.
 
     Spark's ``try_to_timestamp`` needs a format when input varies; the
     wire carries ISO-8601 with offset. Snowflake's TRY_TO_TIMESTAMP_TZ
@@ -42,10 +48,10 @@ def try_to_timestamp(col: Column) -> Column:
     ISO forms — we coalesce over the two shapes the pipeline produces
     (fractional seconds with offset, plain ``ts`` literals).
     """
-    return F.coalesce(
-        F.try_to_timestamp(col, F.lit("yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][XXX][X]")),
-        F.try_to_timestamp(col, F.lit("yyyy-MM-dd HH:mm:ss[.SSSSSS][XXX][X]")),
-        F.try_to_timestamp(col),
+    return (
+        f"coalesce(try_to_timestamp({expr}, \"yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][XXX][X]\"), "
+        f"try_to_timestamp({expr}, \"yyyy-MM-dd HH:mm:ss[.SSSSSS][XXX][X]\"), "
+        f"try_to_timestamp({expr}))"
     )
 
 
@@ -63,111 +69,113 @@ def latency_seconds(event_ts: Column, landed_ts: Column) -> Column:
     ).otherwise(F.lit(None).cast("long"))
 
 
+def shred(payload: str, metadata: str) -> dict[str, str]:
+    """V2-V7 — the typed columns of one bronze row, as SQL expressions
+    keyed by column name.
+
+    ``payload`` and ``metadata`` are SQL expressions for the row's two
+    JSON strings parsed to VARIANT (``try_parse_json``), the analog of the
+    reference's two VARIANT landing columns (``sql/03_tables_raw.sql:5-8``).
+    Each path is a ``try_variant_get``, so a missing key, a wrong type or
+    an unparseable document gives NULL, never an error. The expressions
+    are SQL text because building them through the Column API costs a
+    py4j round trip per call, which a dashboard poll pays every time.
+
+    Engine landing stamps one ``IngestionTime`` per batch, yet typing it
+    there inlines no per-batch timestamp literal into generated code:
+    ``try_parse_json`` is not constant-folded, so ``ingestion_time`` is
+    computed per row like every other column.
+    """
+
+    def rec(path: str) -> str:
+        return f"try_variant_get({payload}, '$.{path}', 'string')"
+
+    return {
+        "work_id": rec("id"),
+        "doi": rec("doi"),
+        "title": rec("title"),
+        # V7: lenient number-or-string parse (TRY_TO_NUMBER(TO_VARCHAR(..))).
+        "publication_year": f"try_cast({rec('publication_year')} AS BIGINT)",
+        "venue": rec("host_venue"),
+        "primary_author": rec("primary_author"),
+        "email": rec("email"),
+        "event_ts": try_to_timestamp(rec("event_ts")),
+        "ingest_ts": try_to_timestamp(rec("ingest_ts")),
+        "load_id": rec("_LOAD_ID"),
+        "ingestion_time": try_to_timestamp(
+            f"try_variant_get({metadata}, '$.IngestionTime', 'string')"
+        ),
+    }
+
+
 def build_vw_works(
     raw: DataFrame,
     now: Column | None = None,
     include_load_id: bool = False,
-    json_engine: str = "struct",
 ) -> DataFrame:
     """V1-V9 — curated projection of the bronze landing table.
 
-    Input: ``(payload string, metadata string)`` rows (RAW_EVENT_SCHEMA).
-    Output columns mirror the reference view (``sql/04_views_curated.sql:28-44``):
+    Input: bronze rows — ``payload`` and ``metadata`` strings, plus the
+    typed columns of ``shred`` when engine landing wrote them. Output
+    columns mirror the reference view (``sql/04_views_curated.sql:28-44``):
     work_id, doi, title, publication_year, venue, primary_author, email,
     event_ts, ingest_ts, landed_ts, latency_seconds.
+
+    Typed bronze is projected as stored. An input without the typed
+    columns is shredded here (``shred``), parsing each JSON once in its
+    own projection.
 
     ``include_load_id`` appends the wire ``_LOAD_ID`` as ``load_id`` —
     the per-record uuid the reference carries specifically so downstream
     dedup can key on it (``ingestion/schema.py:47``); the streaming
     dedup path needs it, the reference view itself doesn't expose it.
-
-    ``json_engine`` picks the shredding strategy (same output either way,
-    pinned by tests):
-
-    - ``"struct"`` (default): ``from_json`` into the explicit envelope
-      schema, then struct field access — nested-schema pruning reads
-      only the needed leaves.
-    - ``"variant"``: Spark 4 ``try_parse_json`` → ``VariantType`` +
-      ``try_variant_get`` paths — the direct analog of the reference's
-      Snowflake VARIANT landing column (``sql/03_tables_raw.sql:5-8``).
-      Schema-free (new wire fields need no schema change) and still
-      parse-once: the optimizer keeps the ``parseJson`` in its own
-      projection (plan-asserted in tests).
     """
     if now is None:
         now = F.current_timestamp()
 
-    if json_engine == "variant":
-        parsed = raw.select(
-            F.try_parse_json(F.col("payload")).alias("v"),
-            F.try_parse_json(F.col("metadata")).alias("mv"),
+    if "ingestion_time" in raw.columns:
+        # A directory that mixes files landed before the typed columns
+        # reads back NULL typed columns for their rows (the schema comes
+        # from one footer). Engine landing never leaves ingestion_time
+        # NULL, so it keys a per-row fallback that shreds only those rows.
+        # The fallback binds the parsed documents in a lambda: lambdas run
+        # interpreted, so it adds almost no generated code to the query,
+        # whose classes are compiled afresh on every poll.
+        docs = (
+            "array(named_struct('payload', try_parse_json(payload), "
+            "'metadata', try_parse_json(metadata)))"
         )
-
-        def rec(path: str) -> Column:
-            return F.try_variant_get("v", f"$.{path}", "string")
-
-        fields = {
-            "id": rec("id"),
-            "doi": rec("doi"),
-            "title": rec("title"),
-            "publication_year": rec("publication_year"),
-            "host_venue": rec("host_venue"),
-            "primary_author": rec("primary_author"),
-            "email": rec("email"),
-            "event_ts": rec("event_ts"),
-            "ingest_ts": rec("ingest_ts"),
-            "_LOAD_ID": rec("_LOAD_ID"),
-        }
-        shredded = parsed.select(
-            F.struct(*[c.alias(k) for k, c in fields.items()]).alias("rec"),
-            F.struct(
-                F.try_variant_get("mv", "$.IngestionTime", "string").alias(
-                    "IngestionTime"
-                )
-            ).alias("meta"),
+        typed = raw.selectExpr(
+            *[
+                f"CASE WHEN ingestion_time IS NULL "
+                f"THEN transform({docs}, r -> {expr})[0] ELSE {name} END AS {name}"
+                for name, expr in shred("r.payload", "r.metadata").items()
+            ]
         )
     else:
-        if json_engine != "struct":
-            raise ValueError(f"unknown json_engine: {json_engine!r}")
-        # V2-V4: one from_json per VARIANT, then cheap struct field access.
-        shredded = raw.select(
-            F.from_json(F.col("payload"), ENVELOPE_SCHEMA).alias("rec"),
-            F.from_json(F.col("metadata"), METADATA_SCHEMA).alias("meta"),
-        )
+        typed = raw.selectExpr(
+            "try_parse_json(payload) AS v", "try_parse_json(metadata) AS mv"
+        ).selectExpr(*[f"{expr} AS {name}" for name, expr in shred("v", "mv").items()])
 
-    event_ts = try_to_timestamp(F.col("rec.event_ts"))
-    ingest_ts = try_to_timestamp(F.col("rec.ingest_ts"))
     # V6: 3-way landed-time coalesce (delivery metadata → producer
     # ingest_ts → query time), reference sql/04_views_curated.sql:20-24.
-    landed_ts = F.coalesce(
-        try_to_timestamp(F.col("meta.IngestionTime")), ingest_ts, now
-    )
-
-    timed = shredded.select(
-        F.col("rec"),
-        event_ts.alias("event_ts"),
-        ingest_ts.alias("ingest_ts"),
-        landed_ts.alias("landed_ts"),
-    )
+    landed_ts = F.coalesce(F.col("ingestion_time"), F.col("ingest_ts"), now)
     cols = [
-        F.col("rec.id").alias("work_id"),
-        F.col("rec.doi").alias("doi"),
-        F.col("rec.title").alias("title"),
-        # V7: lenient number-or-string parse (TRY_TO_NUMBER(TO_VARCHAR(..))).
-        F.expr("try_cast(rec.publication_year AS long)").alias("publication_year"),
-        F.col("rec.host_venue").alias("venue"),
-        F.col("rec.primary_author").alias("primary_author"),
-        F.col("rec.email").alias("email"),
-        F.col("event_ts"),
-        F.col("ingest_ts"),
-        F.col("landed_ts"),
-        latency_seconds(F.col("event_ts"), F.col("landed_ts")).alias(
-            "latency_seconds"
-        ),
+        "work_id",
+        "doi",
+        "title",
+        "publication_year",
+        "venue",
+        "primary_author",
+        "email",
+        "event_ts",
+        "ingest_ts",
+        landed_ts.alias("landed_ts"),
+        latency_seconds(F.col("event_ts"), landed_ts).alias("latency_seconds"),
     ]
     if include_load_id:
-        cols.append(F.col("rec._LOAD_ID").alias("load_id"))
-    return timed.select(*cols)
+        cols.append("load_id")
+    return typed.select(*cols)
 
 
 def build_vw_latency(

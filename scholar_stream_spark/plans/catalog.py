@@ -44,7 +44,8 @@ def init_catalog(
 ) -> dict[str, DataFrame] | list[dict]:
     """Register the engine's view set for ``role``, in dependency order.
 
-    1. ``raw_events``  — bronze landing (payload, metadata)
+    1. ``raw_events``  — bronze landing (verbatim payload and metadata,
+       plus the typed columns written at landing)
     2. ``vw_works``    — curated projection (email masked unless the role
        is privileged — the role-scoped catalog IS the access control)
     3. ``vw_latency``  — KPI aggregate over ``vw_works``

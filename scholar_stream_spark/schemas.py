@@ -10,20 +10,20 @@ and lands raw data as two Snowflake VARIANTs
   with ``from_json`` in PERMISSIVE mode it reproduces pydantic's
   ``extra="ignore"`` + all-Optional semantics exactly: unknown JSON keys
   are dropped, missing keys become NULL.
-- ``ENVELOPE_SCHEMA`` — the flat wire/analytics record (one row per
-  work). ``publication_year`` is intentionally **string** here: JSON
-  producers emit it as number OR string, and the curated view applies the
-  lenient numeric cast (the reference does
+- ``ENVELOPE_FIELDS`` — the flat wire/analytics record (one row per
+  work), in wire key order. ``publication_year`` stays a string on the
+  wire: JSON producers emit it as number OR string, and the curated
+  columns apply the lenient numeric cast (the reference does
   ``TRY_TO_NUMBER(TO_VARCHAR(...))`` for the same reason,
-  ``sql/04_views_curated.sql:32``). Timestamps are likewise parsed
-  leniently in the view (``try_to_timestamp``), so they stay strings on
-  the wire schema.
-- ``RAW_EVENT_SCHEMA`` — the bronze landing table: raw payload JSON plus
-  delivery metadata JSON, the Spark analog of
-  ``RAW.OPENALEX_EVENTS(RECORD, RECORD_METADATA)``. Keeping payload as a
-  raw string is the schema-on-read contract: typing happens in the
-  curated view, never at landing time, so malformed records land instead
-  of failing ingestion.
+  ``sql/04_views_curated.sql:32``); timestamps are likewise ISO strings
+  on the wire, parsed leniently (``try_to_timestamp``).
+- ``RAW_EVENT_SCHEMA`` — the verbatim part of the bronze landing table:
+  raw payload JSON plus delivery metadata JSON, the Spark analog of
+  ``RAW.OPENALEX_EVENTS(RECORD, RECORD_METADATA)``. Engine landing writes
+  the typed curated columns of ``operators.views.shred`` next to them,
+  computed once per record from the same parse that decides
+  dead-lettering. Typing is NULL-on-error, so a well-formed record whose
+  fields do not type still lands, with its payload intact for replay.
 """
 
 from __future__ import annotations
@@ -82,38 +82,11 @@ ENVELOPE_FIELDS = [
     "_LOAD_ID",
 ]
 
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("doi", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("publication_year", T.StringType()),
-        T.StructField("host_venue", T.StringType()),
-        T.StructField("primary_author", T.StringType()),
-        T.StructField("email", T.StringType()),
-        T.StructField("event_ts", T.StringType()),
-        T.StructField("ingest_ts", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("_LOAD_ID", T.StringType()),
-    ]
-)
-
 # --- bronze landing (reference sql/03_tables_raw.sql:5-8) ----------------
 
 RAW_EVENT_SCHEMA = T.StructType(
     [
         T.StructField("payload", T.StringType()),
         T.StructField("metadata", T.StringType()),
-    ]
-)
-
-#: Delivery metadata carried next to each payload — Spark analog of the
-#: Firehose `RECORD_METADATA` VARIANT whose `IngestionTime` feeds the
-#: landed-ts coalesce (reference infra/main.tf:159-161,
-#: sql/04_views_curated.sql:20-24).
-METADATA_SCHEMA = T.StructType(
-    [
-        T.StructField("IngestionTime", T.StringType()),
-        T.StructField("batch_id", T.StringType()),
     ]
 )

@@ -10,8 +10,15 @@ Here a *landing batch* is: take NDJSON lines, attach a metadata JSON
 column (IngestionTime = commit wall-clock, batch_id = uuid-per-batch),
 append to the raw table path as parquet. Records that are not even
 parseable JSON objects go to the dead-letter path instead of the table —
-landing stays schema-agnostic (any valid JSON lands; typing is the
-curated view's job).
+landing stays schema-agnostic: any valid JSON lands, and payload and
+metadata are kept verbatim.
+
+Next to them, each good row carries the typed columns of
+``operators.views.shred``, computed from the same ``try_parse_json``
+value the dead-letter probe needs, inside the write job that already
+runs. The curated views then scan columns instead of re-parsing every
+payload on every read; they still apply masking and the query clock at
+read time. Dead letters keep only ``(payload, metadata, land_date)``.
 
 At scale: the landing write is append-only and partitioned by landing
 date (``land_date``), so curated-view scans over recent windows prune
@@ -22,8 +29,10 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from scholar_stream_spark.operators.views import shred
 
 
 def with_delivery_metadata(lines: DataFrame, batch_id: str | None = None) -> DataFrame:
@@ -46,19 +55,35 @@ def with_delivery_metadata(lines: DataFrame, batch_id: str | None = None) -> Dat
     )
 
 
-def split_dead_letters(landing: DataFrame) -> tuple[DataFrame, DataFrame]:
+def split_dead_letters(
+    landing: DataFrame,
+) -> tuple[DataFrame, DataFrame, Observation]:
     """Partition a landing batch into (good, dead) by JSON well-formedness.
 
     A payload is landable iff it parses as JSON — probed with Spark 4's
     ``try_parse_json`` (NULL on malformed, never an error). Mirrors
     Firehose's FailedDataOnly dead-letter contract: bad bytes are
     preserved verbatim for replay, never dropped.
+
+    Good rows gain the typed columns of ``shred``, taken from the probe's
+    parsed value. The returned ``Observation`` holds ``n_input`` and
+    ``n_dead`` once an action has run on ``good``; the observation also
+    keeps the optimizer from pushing the probe filter below the parse, so
+    each payload is parsed once.
     """
-    probe = F.expr("try_parse_json(payload)")
-    flagged = landing.withColumn("_ok", probe.isNotNull())
-    good = flagged.filter(F.col("_ok")).drop("_ok")
-    dead = flagged.filter(~F.col("_ok")).drop("_ok")
-    return good, dead
+    obs = Observation()
+    parsed = landing.withColumn("_v", F.try_parse_json(F.col("payload")))
+    observed = parsed.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_input"),
+        F.count_if(F.col("_v").isNull()).alias("n_dead"),
+    )
+    typed = shred("_v", "try_parse_json(metadata)")
+    good = observed.filter(F.col("_v").isNotNull()).selectExpr(
+        *landing.columns, *[f"{expr} AS {name}" for name, expr in typed.items()]
+    )
+    dead = parsed.filter(F.col("_v").isNull()).select(*landing.columns)
+    return good, dead, obs
 
 
 def compact_raw(spark, raw_path: str) -> int:
@@ -145,18 +170,28 @@ def land_batch(
     errors_path: str | None = None,
     batch_id: str | None = None,
     errors_layout: str = "date_partition",
-) -> None:
+    max_error_samples: int = 0,
+) -> tuple[int, int, list[str]]:
     """Append one batch of NDJSON lines to the bronze table (parquet,
-    partitioned by land_date); unparseable lines → dead-letter path."""
+    partitioned by land_date); unparseable lines → dead-letter path.
+
+    Returns ``(n_input, n_dead, error_samples)``: the counts come from one
+    observation on the good write, and only a batch with dead letters
+    runs more jobs (up to ``max_error_samples`` verbatim payloads, then
+    the dead-letter write). The dead rows are recomputed from ``lines``,
+    so a streaming caller persists its batch first.
+    """
     landing = with_delivery_metadata(lines, batch_id=batch_id)
-    good, dead = split_dead_letters(landing)
-    (
-        good.write.mode("append")
-        .partitionBy("land_date")
-        .parquet(raw_path)
-    )
-    if errors_path is not None:
-        # Empty writes still create the path; guard with a cheap check on
-        # the already-computed batch (tiny: one micro-batch of lines).
-        if dead.limit(1).count() > 0:
-            write_dead_letters(dead, errors_path, layout=errors_layout)
+    good, dead, obs = split_dead_letters(landing)
+    good.write.mode("append").partitionBy("land_date").parquet(raw_path)
+    counts = obs.get
+    n_input, n_dead = counts["n_input"], counts["n_dead"]
+    samples: list[str] = []
+    if n_dead:
+        if max_error_samples:
+            samples = [
+                r["payload"] for r in dead.limit(max_error_samples).collect()
+            ]
+        if errors_path is not None:
+            write_dead_letters(dead.coalesce(1), errors_path, layout=errors_layout)
+    return n_input, n_dead, samples

@@ -7,8 +7,10 @@ metadata; failures dead-letter to S3 for replay
 
 Spark-native: a file-watch NDJSON source → ``foreachBatch`` that stamps
 delivery metadata (IngestionTime = commit time, batch_id) and appends
-``(payload, metadata, land_date)`` parquet, dead-lettering unparseable
-lines. ``foreachBatch`` + append-only files gives at-least-once delivery
+``(payload, metadata, land_date)`` parquet plus the typed curated
+columns, dead-lettering unparseable lines. ``landing_hook`` is that
+``foreachBatch`` function; the producer CLI lands its REST pages with it
+too. ``foreachBatch`` + append-only files gives at-least-once delivery
 with exactly-once file commits per batch via the checkpoint — the same
 guarantee class as Firehose→Snowflake, but replayable from the
 checkpoint instead of an S3 error prefix.
@@ -28,15 +30,12 @@ downstream curated scans prune, and compaction can run per-day.
 from __future__ import annotations
 
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from scholar_stream_spark.sources.raw_landing import (
-    split_dead_letters,
-    with_delivery_metadata,
-    write_dead_letters,
-)
+from scholar_stream_spark.sources.raw_landing import land_batch
 from scholar_stream_spark.streaming.accounting import (
     IngestAccounting,
     append_metrics,
@@ -47,6 +46,57 @@ TRIGGER_PRESETS = {
     "dev": {"processingTime": "10 seconds"},
     "available_now": {"availableNow": True},
 }
+
+
+def landing_hook(
+    raw_path: str,
+    errors_path: str | None = None,
+    errors_layout: str = "date_partition",
+    output_files_per_batch: int = 4,
+    accounting: IngestAccounting | None = None,
+    metrics_path: str | None = None,
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` function that lands each micro-batch.
+
+    Each batch goes through ``land_batch`` under a fresh
+    ``f"{batch_id}-{uuid}"`` delivery id. A batch without dead letters is
+    one job: the good write, whose observation gives the counts.
+    ``accounting`` records every batch (input/landed/dead counts and error
+    samples); ``metrics_path`` also appends each batch's metrics row as
+    parquet, with a private recorder when no ``accounting`` is given.
+    """
+    if accounting is None and metrics_path is not None:
+        accounting = IngestAccounting()
+
+    def land(batch_df: DataFrame, batch_id: int) -> None:
+        # the dead-letter jobs re-read the batch: persist so the source
+        # is read once
+        batch_df.persist()
+        try:
+            # the landing plan is narrow: coalescing its input bounds the
+            # batch's output files
+            n_input, n_dead, samples = land_batch(
+                batch_df.coalesce(output_files_per_batch),
+                raw_path,
+                errors_path=errors_path,
+                batch_id=f"{batch_id}-{uuid.uuid4()}",
+                errors_layout=errors_layout,
+                max_error_samples=accounting.max_error_samples if accounting else 0,
+            )
+            if accounting is not None:
+                m = accounting.record(
+                    batch_id=f"{batch_id}",
+                    batch_seq=batch_id,
+                    n_input=n_input,
+                    n_dead=n_dead,
+                    error_samples=samples,
+                )
+                if metrics_path is not None:
+                    append_metrics(batch_df.sparkSession, metrics_path, m)
+        finally:
+            batch_df.unpersist()
+
+    return land
 
 
 def start_ingest(
@@ -77,50 +127,14 @@ def start_ingest(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     lines = reader.load(input_dir)
-    track = accounting is not None or metrics_path is not None
-    acct = accounting or IngestAccounting()
-
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch feeds 2-3 actions (good write, dead probe/write,
-        # counters): persist so the source files are read once
-        batch_df.persist()
-        try:
-            landing = with_delivery_metadata(
-                batch_df, batch_id=f"{batch_id}-{uuid.uuid4()}"
-            )
-            good, dead = split_dead_letters(landing)
-            (
-                good.coalesce(output_files_per_batch)
-                .write.mode("append")
-                .partitionBy("land_date")
-                .parquet(raw_path)
-            )
-            n_dead = 0
-            samples: list[str] = []
-            if errors_path is not None or track:
-                dead_sample = dead.limit(
-                    max(acct.max_error_samples, 1)
-                ).collect()
-                if dead_sample:
-                    n_dead = dead.count()
-                    samples = [r["payload"] for r in dead_sample]
-            if errors_path is not None and n_dead:
-                write_dead_letters(
-                    dead.coalesce(1), errors_path, layout=errors_layout
-                )
-            if track:
-                m = acct.record(
-                    batch_id=f"{batch_id}",
-                    batch_seq=batch_id,
-                    n_input=batch_df.count(),
-                    n_dead=n_dead,
-                    error_samples=samples,
-                )
-                if metrics_path is not None:
-                    append_metrics(spark, metrics_path, m)
-        finally:
-            batch_df.unpersist()
-
+    land = landing_hook(
+        raw_path,
+        errors_path=errors_path,
+        errors_layout=errors_layout,
+        output_files_per_batch=output_files_per_batch,
+        accounting=accounting,
+        metrics_path=metrics_path,
+    )
     writer = (
         lines.writeStream.foreachBatch(land)
         .option("checkpointLocation", checkpoint_path)

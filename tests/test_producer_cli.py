@@ -54,7 +54,14 @@ def test_produce_lands_bronze_rows(pages_file, tmp_path, capsys, spark):
     assert rc == 0
     landed = spark.read.parquet(raw)
     assert landed.count() == 5
-    assert set(landed.columns) == {"payload", "metadata", "land_date"}
+    # the verbatim envelope and delivery metadata, next to the typed
+    # curated columns written at landing
+    assert set(landed.columns) == {
+        "payload", "metadata", "land_date",
+        "work_id", "doi", "title", "publication_year", "venue",
+        "primary_author", "email", "event_ts", "ingest_ts", "load_id",
+        "ingestion_time",
+    }
     # every payload is a valid envelope line with the canonical id field
     ids = {
         json.loads(r["payload"])["id"] for r in landed.collect()

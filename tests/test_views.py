@@ -123,31 +123,11 @@ def test_analyst_catalog_masks_email(spark, raw_events):
     assert emails["W3"] is None            # NULL stays NULL
 
 
-def test_variant_engine_matches_struct_engine(raw_events):
-    """Spark-4 VARIANT shredding (try_parse_json + try_variant_get) must
-    produce the exact rows the from_json strategy does — on the full
-    edge-fixture set (string year, garbage year, malformed event_ts,
-    missing metadata, unparseable payload never crashing)."""
-    struct_rows = sorted(
-        build_vw_works(raw_events, now=_now_col()).collect(),
-        key=lambda r: r["work_id"],
-    )
-    variant_rows = sorted(
-        build_vw_works(
-            raw_events, now=_now_col(), json_engine="variant"
-        ).collect(),
-        key=lambda r: r["work_id"],
-    )
-    assert [r.asDict() for r in variant_rows] == [
-        r.asDict() for r in struct_rows
-    ]
-
-
 def test_variant_engine_parses_once(raw_events):
     """The optimizer must keep ONE parseJson per input column (payload +
     metadata = 2), never inline it into each of the 10+ extractions."""
     plan = (
-        build_vw_works(raw_events, now=_now_col(), json_engine="variant")
+        build_vw_works(raw_events, now=_now_col())
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -162,16 +142,7 @@ def test_variant_engine_tolerates_malformed_payload(spark):
     )
     rows = {
         r["work_id"]: r
-        for r in build_vw_works(
-            raw, now=_now_col(), json_engine="variant"
-        ).collect()
+        for r in build_vw_works(raw, now=_now_col()).collect()
     }
     assert set(rows) == {None, "W9"}
     assert rows["W9"]["landed_ts"] == datetime(2024, 6, 1, 12, 0, 0)
-
-
-def test_unknown_json_engine_rejected(raw_events):
-    import pytest
-
-    with pytest.raises(ValueError, match="json_engine"):
-        build_vw_works(raw_events, json_engine="regex")
