@@ -2174,28 +2174,6 @@ def profile_pairs() -> dict[str, dict[str, Callable[[SparkSession, str], DataFra
                 _t(s, d, "embeddings"), profile="scale"
             ),
         },
-        # round-7 split: the ExactSubstr cut's span table broadcast is
-        # bench-profile only; the scale profile equi-joins on doc_id so
-        # AQE sizes it (span count is corpus-proportional at 100 TB)
-        "remove_dup_spans": {
-            "oracle": lambda s, d: dedup.remove_duplicate_spans(docs(s, d)),
-            "scale": lambda s, d: dedup.remove_duplicate_spans(
-                docs(s, d), span_join="shuffle"
-            ),
-        },
-        # round-8 split (r7 verdict follow-through): the Q3 key-list
-        # broadcast is defensible but still a hint on a SF-linear
-        # table; the scale profile hands the build-side decision to AQE
-        "shipping_priority": {
-            "oracle": lambda s, d: relational.shipping_priority(
-                _t(s, d, "lineitem"), _t(s, d, "orders"),
-                _t(s, d, "customer"),
-            ),
-            "scale": lambda s, d: relational.shipping_priority(
-                _t(s, d, "lineitem"), _t(s, d, "orders"),
-                _t(s, d, "customer"), cust_join="auto",
-            ),
-        },
     }
 
 

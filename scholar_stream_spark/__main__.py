@@ -38,7 +38,7 @@ import sys
 import tempfile
 
 from scholar_stream_spark.sources.rest import MAX_PER_PAGE
-from scholar_stream_spark.plans.partitioning import driver_rows_df
+from scholar_stream_spark.plans.hybrid import driver_rows_df
 
 DEFAULT_BATCH_SIZE = 50
 

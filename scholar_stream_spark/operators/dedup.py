@@ -43,10 +43,9 @@ from scholar_stream_spark.functions.hashing import (
     hex48_spark_sql,
 )
 from scholar_stream_spark.functions.text import normalize_text, word_shingles
-from scholar_stream_spark.plans.partitioning import (
-    driver_rows_df,
-    scale_out,
-)
+from scholar_stream_spark.plans import hybrid
+from scholar_stream_spark.plans.hybrid import driver_rows_df
+from scholar_stream_spark.plans.partitioning import scale_out
 
 SHINGLE_N = 5
 JACCARD_THRESHOLD = 0.8
@@ -1292,7 +1291,6 @@ def remove_duplicate_spans(
     documents: DataFrame,
     window: int = SUBSTR_WINDOW,
     min_count: int = SUBSTR_MIN_COUNT,
-    span_join: str = "broadcast",
     keep: str = "all",
 ) -> DataFrame:
     """Cut the ``duplicate_spans`` token ranges out of each document —
@@ -1319,24 +1317,16 @@ def remove_duplicate_spans(
     (token index ∉ any span). The token table is never exploded —
     per-doc cost is tokens × spans-per-doc.
 
-    ``span_join`` picks how the span rows come back onto the tokenized
-    docs (round-7 split — the round-6 forced broadcast was the one
-    scale defect that round):
-
-    - ``"broadcast"`` (default, bench/oracle profile): force-broadcast
-      the span table — zero corpus shuffle, correct while the span set
-      is small relative to executor memory.
-    - ``"shuffle"`` (scale profile): plain ``doc_id`` equi-join with no
-      hint, letting AQE size the strategy. The span count grows with
-      the number of documents containing duplicated windows — on
-      templated web corpora a double-digit percentage (the ExactSubstr
-      paper's motivation), i.e. multi-GB..TB at 100 TB, where a forced
-      broadcast (which bypasses autoBroadcastJoinThreshold) is a
-      guaranteed driver/executor OOM. One bounded corpus shuffle on
-      ``doc_id`` is the right price at that scale.
+    The span rows come back onto the tokenized docs by a plain
+    ``doc_id`` equi-join with no hint, so AQE picks the strategy from
+    runtime sizes: a broadcast while the span set is small, a shuffle
+    when it is not. The span count grows with the number of documents
+    containing duplicated windows — on templated web corpora a
+    double-digit percentage (the ExactSubstr paper's motivation), i.e.
+    multi-GB..TB at 100 TB, where a forced broadcast (which bypasses
+    autoBroadcastJoinThreshold) would OOM. A forced-broadcast variant
+    measured no faster at sf0.01 or sf0.1, so it is gone.
     """
-    if span_join not in ("broadcast", "shuffle"):
-        raise ValueError(f"unknown span_join: {span_join!r}")
     toks = scale_out(documents).select(
         "doc_id", F.split(F.trim(F.col("text")), SUBSTR_WS_RE).alias("ws")
     )
@@ -1346,8 +1336,6 @@ def remove_duplicate_spans(
     doc_spans = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("sp")
     )
-    if span_join == "broadcast":
-        doc_spans = F.broadcast(doc_spans)
     joined = toks.join(doc_spans, "doc_id", "left")
     kept_arr = F.when(F.col("sp").isNull(), F.col("ws")).otherwise(
         F.filter(
@@ -1650,13 +1638,6 @@ def remove_dup_paragraphs(
     )
 
 
-#: Pair graphs (undirected edges) smaller than this are collected and
-#: solved on the driver by `hybrid_components`; larger ones run the
-#: distributed star kernel. The one CC size cap — at 0 every graph,
-#: the empty one too, takes the distributed branch (tests force it so).
-CC_MAX_DRIVER_EDGES = 1_000_000
-
-
 def _driver_components(spark, edge_rows) -> DataFrame:
     """Union-find over a collected (small) (d1, d2) edge list →
     (node, lbl, size), the `hybrid_components` contract. Every union
@@ -1795,15 +1776,16 @@ def hybrid_components(pairs: DataFrame) -> DataFrame:
 
     Hybrid, like every production CC implementation: the pair graphs
     fed here (near-dup bands, SNM match edges) are RARE by
-    construction, so below ``CC_MAX_DRIVER_EDGES`` a driver union-find
-    replaces ~2 Spark jobs per star round with one collect. The size
-    check IS the collect — limit(cap) bounds driver memory and runs
-    the pair pipeline exactly once in the common path. At the cap the
-    star kernel runs (it checkpoints its input, so the loop never
-    re-runs the pair pipeline) — same labels either way, pinned by
-    tests that force both branches."""
-    probe = pairs.limit(CC_MAX_DRIVER_EDGES).collect()
-    if len(probe) < CC_MAX_DRIVER_EDGES:
+    construction, so up to ``hybrid.DRIVER_EDGE_CAP`` undirected edges
+    (the empty graph too) a driver union-find replaces ~2 Spark jobs
+    per star round with one collect. The size check IS the collect —
+    the bounded probe bounds driver memory and runs the pair pipeline
+    exactly once in the common path. Above the cap the star kernel
+    runs (it checkpoints its input, so the loop never re-runs the pair
+    pipeline) — same labels either way, pinned by tests that force
+    both branches."""
+    probe = hybrid.bounded_probe(pairs, hybrid.DRIVER_EDGE_CAP)
+    if probe is not None:
         return _driver_components(pairs.sparkSession, probe)
     return connected_components(pairs).select(
         "node",
@@ -1825,8 +1807,8 @@ def neardup_clusters(
     cluster_id row, drop the rest — or keep the best-quality member,
     the cluster is the unit either way). The components come from
     `hybrid_components`: a driver union-find while the pair graph is
-    small (the expected case), the large-star/small-star kernel from
-    ``CC_MAX_DRIVER_EDGES`` edges up.
+    small (the expected case), the large-star/small-star kernel above
+    ``hybrid.DRIVER_EDGE_CAP`` edges.
 
     Output: (doc_id, cluster_id, cluster_size) for every document that
     appears in ≥1 near-dup pair (singletons are their own cluster

@@ -8,6 +8,10 @@ differ from CC's integer labels: no exact convergence checksum is
 possible (floats drift), so rounds are a FIXED budget, and every
 iteration must checkpoint or the lineage re-executes all prior rounds
 per action.
+
+Driver fast paths are picked by ``plans.hybrid.bounded_probe`` against
+module constants (``hybrid.DRIVER_EDGE_CAP``, and
+``TRIANGLE_DRIVER_NODE_CAP`` for the triangle matmul), never by caller.
 """
 
 from __future__ import annotations
@@ -19,7 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from scholar_stream_spark.plans.partitioning import driver_rows_df
+from scholar_stream_spark.plans import hybrid
+from scholar_stream_spark.plans.hybrid import driver_rows_df
 
 #: PageRank defaults: the canonical damping factor and a round budget
 #: sized for small-diameter business graphs (power iteration converges
@@ -43,7 +48,6 @@ def pagerank(
     damping: float = PAGERANK_DAMPING,
     n_iter: int = PAGERANK_ITER,
     with_residual: bool = False,
-    max_driver_edges: int = 1_000_000,
 ) -> DataFrame:
     """Weighted PageRank over a (src, dst, weight) edge list — the
     Brin-Page random surfer with edge-weight-proportional transitions:
@@ -122,9 +126,9 @@ def pagerank(
     # precedent, applied after measurement: the distributed loop costs
     # ~0.2 s of stage latency PER ROUND on a grid-sized graph, ~4 s of
     # the 20-round budget, for state one numpy pass updates in
-    # microseconds): below ``max_driver_edges`` the NORMALIZED edge
-    # list is collected once (the limit(n+1) probe IS the size check —
-    # bounded driver state by construction, the CC/kcore contract) and
+    # microseconds): below ``hybrid.DRIVER_EDGE_CAP`` the NORMALIZED
+    # edge list is collected once (the bounded probe IS the size
+    # check — bounded driver state by construction) and
     # the identical recurrence runs in numpy; above it, the
     # distributed loop below is unchanged. Same doubles up to
     # float-sum re-association (the indeterminacy the distributed
@@ -144,48 +148,45 @@ def pagerank(
     # driver-side re-summation of _wout could re-associate the float
     # sum, so it stays in-engine). Above the cap the full-scan
     # validation aggregate and node count run as before.
-    if max_driver_edges > 0:
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
+    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_edges = pool.submit(
-                edges.limit(max_driver_edges + 1).collect
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_edges = pool.submit(
+            hybrid.bounded_probe, edges, hybrid.DRIVER_EDGE_CAP
+        )
+        f_norm = pool.submit(
+            hybrid.bounded_probe, norm, hybrid.DRIVER_EDGE_CAP
+        )
+        eprobe = f_edges.result()
+        nprobe = f_norm.result()
+    # norm has at most as many rows as edges, so it fits whenever
+    # edges does
+    if eprobe is not None and nprobe is not None:
+        if any(r["weight"] is None or r["weight"] <= 0 for r in eprobe):
+            raise ValueError(
+                "pagerank: edge weights must be positive and "
+                "non-NULL (a zero/negative weight has no "
+                "transition-probability reading)"
             )
-            f_norm = pool.submit(
-                norm.limit(max_driver_edges + 1).collect
+        node_set = {r["src"] for r in eprobe} | {r["dst"] for r in eprobe}
+        n = len(node_set)
+        if n == 0:
+            raise ValueError(
+                "pagerank: empty edge list (no nodes — rank over "
+                "nothing has no reading; a bare ZeroDivisionError "
+                "from 1/n would hide the real problem)"
             )
-            eprobe = f_edges.result()
-            nprobe = f_norm.result()
-        if len(eprobe) <= max_driver_edges:
-            if any(
-                r["weight"] is None or r["weight"] <= 0 for r in eprobe
-            ):
-                raise ValueError(
-                    "pagerank: edge weights must be positive and "
-                    "non-NULL (a zero/negative weight has no "
-                    "transition-probability reading)"
-                )
-            node_set = {r["src"] for r in eprobe} | {
-                r["dst"] for r in eprobe
-            }
-            n = len(node_set)
-            if n == 0:
-                raise ValueError(
-                    "pagerank: empty edge list (no nodes — rank over "
-                    "nothing has no reading; a bare ZeroDivisionError "
-                    "from 1/n would hide the real problem)"
-                )
-            has_dangling = len({r["src"] for r in eprobe}) < n
-            return _pagerank_driver(
-                edges.sparkSession,
-                nprobe,
-                list(node_set),
-                nodes.schema["node"].dataType,
-                damping,
-                n_iter,
-                has_dangling=has_dangling,
-                with_residual=with_residual,
-            )
+        has_dangling = len({r["src"] for r in eprobe}) < n
+        return _pagerank_driver(
+            edges.sparkSession,
+            nprobe,
+            list(node_set),
+            nodes.schema["node"].dataType,
+            damping,
+            n_iter,
+            has_dangling=has_dangling,
+            with_residual=with_residual,
+        )
     # distributed path: ONE 1-row aggregate carries weight validation
     # and the distinct source count (the hits() consolidation, r16
     # ADVICE item 3): the dangling test below becomes arithmetic
@@ -653,8 +654,9 @@ def trade_triangle_census(
     )
 
 
-#: Bounded probes for the dense-matmul triangle fast path (r17; the
-#: kcore/pagerank driver-hybrid family). Below BOTH caps the triangle
+#: Node bound for the dense-matmul triangle fast path (r17; the
+#: kcore/pagerank driver-hybrid family). Below BOTH the shared edge cap
+#: (``hybrid.DRIVER_EDGE_CAP``) and this node cap the triangle
 #: kernels count on the driver via one exact 0/1-adjacency matmul —
 #: common-neighbor counts are small integers (≤ node cap < 2^53), so
 #: float64 BLAS is EXACT integer arithmetic, and the node cap bounds
@@ -662,15 +664,10 @@ def trade_triangle_census(
 #: ~1.4e11 FLOP (seconds of BLAS). Above either cap the distributed
 #: degree-ordered orientation kernel runs unchanged — that is the
 #: O(m^{3/2}) shape that serves 100 TB.
-TRIANGLE_DRIVER_EDGE_CAP = 1_000_000
 TRIANGLE_DRIVER_NODE_CAP = 4096
 
 
-def _triangle_probe(
-    und: DataFrame,
-    edge_cap: int = TRIANGLE_DRIVER_EDGE_CAP,
-    node_cap: int = TRIANGLE_DRIVER_NODE_CAP,
-):
+def _triangle_probe(und: DataFrame):
     """Driver triangle counts under bounded probes, or ``None``.
 
     Returns ``(nodes, deg, tri_per_node, n_edges)`` where ``nodes`` is
@@ -678,18 +675,19 @@ def _triangle_probe(
     edge-row degree per node and ``tri_per_node`` the EXACT triangle
     count per node (int64) — ``((A·A) ∘ A)·1 / 2`` over the 0/1
     symmetric adjacency. ``und`` must be the kernels' documented
-    contract: deduplicated canonical ``a < b`` pairs."""
-    # Arrow collect (r17 opt): a 142k-edge probe costs ~1 s as py4j
-    # Row deserialization and ~50 ms as an Arrow batch — same bounded
-    # limit, same values (.tolist() yields plain Python scalars).
-    pdf = und.select("a", "b").limit(edge_cap + 1).toPandas()
-    if len(pdf) == 0 or len(pdf) > edge_cap:
+    contract: deduplicated canonical ``a < b`` pairs. An empty graph
+    returns ``None``: the distributed kernels own its contract."""
+    # Arrow probe: .tolist() yields plain Python scalars
+    pdf = hybrid.bounded_probe(
+        und.select("a", "b"), hybrid.DRIVER_EDGE_CAP, arrow=True
+    )
+    if pdf is None or len(pdf) == 0:
         return None
     vals_a = pdf["a"].tolist()
     vals_b = pdf["b"].tolist()
     nodes = sorted(set(vals_a) | set(vals_b))
     n = len(nodes)
-    if n > node_cap:
+    if n > TRIANGLE_DRIVER_NODE_CAP:
         return None
     idx = {v: i for i, v in enumerate(nodes)}
     ai = np.fromiter((idx[v] for v in vals_a), np.int64, len(vals_a))
@@ -1060,7 +1058,7 @@ def trade_assortativity(
     )
 
 
-def _assort_probe(und: DataFrame, edge_cap: int = TRIANGLE_DRIVER_EDGE_CAP):
+def _assort_probe(und: DataFrame):
     """Exact assortativity moments under a bounded edge probe, or
     ``None``. Returns ``(m2, sjk, sj, sj2)`` as plain Python ints —
     the SAME both-orientation stub moments the distributed aggregate
@@ -1068,9 +1066,12 @@ def _assort_probe(und: DataFrame, edge_cap: int = TRIANGLE_DRIVER_EDGE_CAP):
     contribute, so m2 = 2·|E|, sjk = 2·Σ_E deg_a·deg_b, and the j
     moments fold both endpoints. Python ints are arbitrary-precision,
     so exactness needs no width argument at all (the distributed path
-    carries the same values as DECIMAL(38,0))."""
-    pdf = und.select("a", "b").limit(edge_cap + 1).toPandas()
-    if len(pdf) == 0 or len(pdf) > edge_cap:
+    carries the same values as DECIMAL(38,0)). An empty graph returns
+    ``None``: the distributed aggregate owns its contract."""
+    pdf = hybrid.bounded_probe(
+        und.select("a", "b"), hybrid.DRIVER_EDGE_CAP, arrow=True
+    )
+    if pdf is None or len(pdf) == 0:
         return None
     vals_a = pdf["a"].tolist()
     vals_b = pdf["b"].tolist()
@@ -1174,7 +1175,6 @@ def trade_kcore(
     lineitem: DataFrame,
     supplier: DataFrame,
     max_iter: int = KCORE_MAX_ITER,
-    max_driver_edges: int = 1_000_000,
 ) -> DataFrame:
     """Coreness (k-core number) of every nation in the strong trade
     support graph — the robustness ladder peeling can't fake: a node
@@ -1208,7 +1208,6 @@ def trade_kcore(
         ),
         max_iter=max_iter,
         key_col="nation_key",
-        max_driver_edges=max_driver_edges,
     )
 
 
@@ -1253,7 +1252,6 @@ def kcore(
     und: DataFrame,
     max_iter: int = KCORE_MAX_ITER,
     key_col: str = "node",
-    max_driver_edges: int = 1_000_000,
 ) -> DataFrame:
     """Generic coreness (k-core number) over an undirected (a < b)
     edge list — the kernel behind `trade_kcore` and `user_kcore`.
@@ -1261,10 +1259,11 @@ def kcore(
     Hybrid, like the dedup module's `hybrid_components` (applied
     after r17 measurement — the distributed fixpoint spent
     10.8 s on a 142k-edge graph the driver peels in milliseconds,
-    ~2 Spark jobs per round × a data-dependent round count): below
-    ``max_driver_edges`` the edge list is collected ONCE (the
-    limit(n+1) probe IS the size check) and exact Matula–Beck peeling
-    runs on the driver; above it, the distributed h-index fixpoint
+    ~2 Spark jobs per round × a data-dependent round count): up to
+    ``hybrid.DRIVER_EDGE_CAP`` edges the edge list is collected ONCE
+    (the bounded probe IS the size check; an empty graph peels to no
+    rows) and exact Matula–Beck peeling runs on the driver; above it,
+    the distributed h-index fixpoint
     (algorithm, exact-integer convergence checksum, loud round-cap,
     and scale shape per the trade wrapper's docstring) — identical
     values either way, pinned by a test that forces both paths.
@@ -1274,16 +1273,12 @@ def kcore(
         raise ValueError(
             f"kcore: max_iter must be >= 1, got {max_iter}"
         )
-    if max_driver_edges > 0:
-        # Arrow probe (r17 opt — the `_triangle_probe` rationale)
-        probe = und.select("a", "b").limit(
-            max_driver_edges + 1
-        ).toPandas()
-        if len(probe) <= max_driver_edges:
-            return _kcore_driver_peel(
-                und.sparkSession, probe, key_col
-            )
-        und = und.localCheckpoint()  # loop must not re-run the build
+    probe = hybrid.bounded_probe(
+        und.select("a", "b"), hybrid.DRIVER_EDGE_CAP, arrow=True
+    )
+    if probe is not None:
+        return _kcore_driver_peel(und.sparkSession, probe, key_col)
+    und = und.localCheckpoint()  # loop must not re-run the build
     adj = (
         und.select("a", "b")
         .unionAll(
@@ -1353,7 +1348,6 @@ def hits(
     edges: DataFrame,
     n_iter: int = HITS_ITER,
     with_residual: bool = False,
-    max_driver_edges: int = 1_000_000,
 ) -> DataFrame:
     """Weighted HITS (Kleinberg JACM 1999) over a (src, dst, weight)
     edge list — the directed DUAL reading `pagerank` collapses: a HUB
@@ -1408,27 +1402,24 @@ def hits(
     # row-local and exact), collapsing the old three driver actions
     # (stats aggregate, node collect, probe) into ONE. Above the cap
     # the full-scan stats aggregate runs as before.
-    if max_driver_edges > 0:
-        probe = w_edges.limit(max_driver_edges + 1).collect()
-        if len(probe) <= max_driver_edges:
-            if not probe:
-                raise ValueError("hits: empty edge list")
-            if any(r["_w"] is None or r["_w"] <= 0 for r in probe):
-                raise ValueError(
-                    "hits: edge weights must be positive and non-NULL"
-                )
-            node_set = {r["src"] for r in probe} | {
-                r["dst"] for r in probe
-            }
-            return _hits_driver(
-                edges.sparkSession,
-                probe,
-                list(node_set),
-                nodes.schema["node"].dataType,
-                len({r["src"] for r in probe}),
-                n_iter,
-                with_residual=with_residual,
+    probe = hybrid.bounded_probe(w_edges, hybrid.DRIVER_EDGE_CAP)
+    if probe is not None:
+        if not probe:
+            raise ValueError("hits: empty edge list")
+        if any(r["_w"] is None or r["_w"] <= 0 for r in probe):
+            raise ValueError(
+                "hits: edge weights must be positive and non-NULL"
             )
+        node_set = {r["src"] for r in probe} | {r["dst"] for r in probe}
+        return _hits_driver(
+            edges.sparkSession,
+            probe,
+            list(node_set),
+            nodes.schema["node"].dataType,
+            len({r["src"] for r in probe}),
+            n_iter,
+            with_residual=with_residual,
+        )
     # distributed path: ONE eager action validates and sizes
     # everything the loop needs: empty-input check (n_edges), weight
     # validation (n_bad), and the hub-seed denominator (n_hubs) come
@@ -1689,7 +1680,6 @@ def user_clustering(events: DataFrame) -> DataFrame:
 def user_kcore(
     events: DataFrame,
     max_iter: int = KCORE_MAX_ITER,
-    max_driver_edges: int = 1_000_000,
 ) -> DataFrame:
     """Coreness of every user in the co-activity graph — the
     densely-interlocked co-activity nucleus (a user of coreness k
@@ -1704,7 +1694,6 @@ def user_kcore(
         coactivity_support(events),
         max_iter=max_iter,
         key_col="user_id",
-        max_driver_edges=max_driver_edges,
     )
 
 

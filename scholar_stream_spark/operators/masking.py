@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from scholar_stream_spark.functions.text import PRIVILEGED_ROLES, mask_email
-from scholar_stream_spark.plans.partitioning import driver_rows_df
+from scholar_stream_spark.plans import hybrid
+from scholar_stream_spark.plans.hybrid import driver_rows_df
 
 #: Role taxonomy carried over from the reference (sql/02_rbac_policies.sql).
 KNOWN_ROLES = ("ACCOUNTADMIN", "R_INGEST", "R_TRANSFORM", "R_ANALYST")
@@ -450,9 +451,9 @@ def _qi_report_stats_distributed(cells):
 #: Bounded probe for the ladder report's driver fast path (r18 — the
 #: graph/ANN/BPE hybrid applied to the QI grid): the `_qi_cells` table
 #: is grid-cardinality by construction (|geos| × |segments| × |bands|),
-#: so on any real table it is thousands of rows; the limit(cap+1)
-#: probe IS the size check, and above the cap the distributed rollups
-#: run unchanged.
+#: so on any real table it is thousands of rows; the bounded probe IS
+#: the size check, and above the cap the distributed rollups run
+#: unchanged.
 QI_REPORT_DRIVER_CAP = 100_000
 
 
@@ -587,8 +588,8 @@ def generalize_qi_report(
     # are the SAME Spark expressions either way. Above the cap the
     # distributed rollups (r17 level-keyed one-pass shape) run
     # unchanged.
-    probe = cells.limit(QI_REPORT_DRIVER_CAP + 1).toPandas()
-    if len(probe) <= QI_REPORT_DRIVER_CAP:
+    probe = hybrid.bounded_probe(cells, QI_REPORT_DRIVER_CAP, arrow=True)
+    if probe is not None:
         spark = customer.sparkSession
         krows, lrows, trows = _qi_report_stats_driver(probe)
         kstats = driver_rows_df(

@@ -182,7 +182,6 @@ def shipping_priority(
     cutoff: str = SHIPPING_CUTOFF,
     segment: str = SHIPPING_SEGMENT,
     k: int = SHIPPING_TOPN,
-    cust_join: str = "broadcast",
 ) -> DataFrame:
     """TPC-H-Q3-shaped query: top-K unshipped orders by revenue for one
     market segment — the classic selective-dimension → fact → fact
@@ -195,26 +194,17 @@ def shipping_priority(
     tie-break (revenue desc, orderdate, orderkey) — never a global
     sort.
 
-    ``cust_join`` picks how the segment-filtered customer KEY LIST
-    meets orders (the remove_duplicate_spans ``span_join`` idiom):
-
-    - ``"broadcast"`` (default): force-broadcast the key list —
-      defensible unlike a payload broadcast (one bigint column,
-      semi-join-sized build, ~1/5 of custkeys), but it is still a
-      hint on a table that grows linearly with scale factor.
-    - ``"auto"`` (scale profile): no hint — AQE sizes the build side
-      from runtime stats, falling back to shuffle when the segment's
-      key list outgrows the broadcast threshold. The right default at
-      warehouse scale, where even a key list can be tens of GB.
+    The segment-filtered customer KEY LIST meets orders with no join
+    hint: AQE sizes the build side from runtime stats, broadcasting
+    while the key list is small and shuffling once it outgrows the
+    broadcast threshold (at warehouse scale even a key list can be
+    tens of GB). A forced-broadcast variant measured no faster at
+    sf0.01 or sf0.1, so it is gone.
     """
-    if cust_join not in ("broadcast", "auto"):
-        raise ValueError(f"unknown cust_join: {cust_join!r}")
     cut = F.to_timestamp(F.lit(cutoff))
     cust = customer.filter(F.col("c_mktsegment") == segment).select(
         "c_custkey"
     )
-    if cust_join == "broadcast":
-        cust = F.broadcast(cust)
     ords = orders.filter(F.col("o_orderdate") < cut).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
     )

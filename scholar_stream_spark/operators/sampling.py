@@ -20,10 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scholar_stream_spark.functions.hashing import hex48_spark_sql
-from scholar_stream_spark.plans.partitioning import (
-    driver_rows_df,
-    scale_out,
-)
+from scholar_stream_spark.plans.hybrid import driver_rows_df
+from scholar_stream_spark.plans.partitioning import scale_out
 
 #: Default split ranges over the 100 hash buckets: [0,90) train,
 #: [90,95) val, [95,100) test.

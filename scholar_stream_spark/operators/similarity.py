@@ -37,10 +37,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scholar_stream_spark.functions.vectors import cosine_from_norms, l2_norm
-from scholar_stream_spark.plans.partitioning import (
-    driver_rows_df,
-    scale_out,
-)  # noqa: F401
+from scholar_stream_spark.plans import hybrid
+from scholar_stream_spark.plans.hybrid import driver_rows_df
+from scholar_stream_spark.plans.partitioning import scale_out
 
 # scale_out is re-exported for callers/tests composing their own corpus
 # staging; the operators below deliberately no longer wrap the
@@ -1634,7 +1633,7 @@ PQ_TRAIN_ITERS = 4
 #: Bounded driver-training probe (r17 optimization; the kcore/pagerank
 #: hybrid precedent): below this row count the iterative trainers run
 #: their IDENTICAL recurrences on a driver-collected copy of the
-#: corpus — one bounded collect (``limit(cap+1)``, ≤ ~50 MB at dim 64)
+#: corpus — one bounded collect (``hybrid.bounded_probe``, ≤ ~50 MB at dim 64)
 #: replaces n_rounds whole Spark jobs whose collected payload was
 #: geometry-sized anyway (guide §1.2: at bench scale each extra round
 #: is pure job-scheduling latency, not data). Above the cap every
@@ -1644,21 +1643,16 @@ PQ_TRAIN_ITERS = 4
 ANN_DRIVER_TRAIN_CAP = 100_000
 
 
-def _train_rows(
-    embeddings: DataFrame, cap: int = ANN_DRIVER_TRAIN_CAP
-) -> list | None:
+def _train_rows(embeddings: DataFrame) -> list | None:
     """Bounded corpus probe for the driver-side training fast path:
     the collected ``(vec_id, embedding)`` rows when the corpus holds
-    1..``cap`` rows, else ``None`` (the distributed trainers take over
-    — and the empty corpus keeps the distributed paths' error
-    contracts). Driver state is bounded by construction
-    (``limit(cap + 1)``)."""
-    rows = (
-        embeddings.select("vec_id", "embedding").limit(cap + 1).collect()
+    1..``ANN_DRIVER_TRAIN_CAP`` rows, else ``None`` (the distributed
+    trainers take over — and the empty corpus keeps the distributed
+    paths' error contracts)."""
+    rows = hybrid.bounded_probe(
+        embeddings.select("vec_id", "embedding"), ANN_DRIVER_TRAIN_CAP
     )
-    if not rows or len(rows) > cap:
-        return None
-    return rows
+    return rows or None
 
 
 def _pq_seed_codebook(

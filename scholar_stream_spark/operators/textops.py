@@ -15,10 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from scholar_stream_spark.plans.partitioning import (
-    driver_rows_df,
-    scale_out,
-)
+from scholar_stream_spark.plans import hybrid
+from scholar_stream_spark.plans.hybrid import driver_rows_df
+from scholar_stream_spark.plans.partitioning import scale_out
 from scholar_stream_spark.functions.hashing import hex48_spark_sql
 from scholar_stream_spark.functions.text import normalize_text
 
@@ -1042,11 +1041,11 @@ def bpe_train(documents: DataFrame, n_merges: int = BPE_TRAIN_MERGES) -> DataFra
     # precedent): the merge loop runs on the VOCAB-sized table, and a
     # vocabulary under the cap trains on the driver with the identical
     # integer recurrence — replacing 2 Spark jobs per round with one
-    # bounded probe collect. The probe IS the size check
-    # (limit(cap+1) bounds driver memory by construction); above the
-    # cap the distributed loop below is unchanged.
-    probe = vocab.limit(BPE_DRIVER_VOCAB_CAP + 1).collect()
-    if len(probe) <= BPE_DRIVER_VOCAB_CAP:
+    # bounded probe collect. The probe IS the size check (it bounds
+    # driver memory by construction); above the cap the distributed
+    # loop below is unchanged.
+    probe = hybrid.bounded_probe(vocab, BPE_DRIVER_VOCAB_CAP)
+    if probe is not None:
         return driver_rows_df(
             spark,
             _bpe_driver_train(probe, n_merges),
@@ -1895,8 +1894,6 @@ def bpe_train_batched(
     is the count observed at the round's start (stale within a round
     by construction).
     """
-    from scholar_stream_spark.plans.partitioning import scale_out
-
     spark = documents.sparkSession
     vocab = (
         scale_out(documents)
@@ -1911,8 +1908,8 @@ def bpe_train_batched(
     )
     # Hybrid driver fast path — same probe discipline as `bpe_train`;
     # the batched admission and fold are merge-for-merge identical.
-    probe = vocab.limit(BPE_DRIVER_VOCAB_CAP + 1).collect()
-    if len(probe) <= BPE_DRIVER_VOCAB_CAP:
+    probe = hybrid.bounded_probe(vocab, BPE_DRIVER_VOCAB_CAP)
+    if probe is not None:
         return driver_rows_df(
             spark,
             _bpe_driver_train_batched(probe, n_merges, batch),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from scholar_stream_spark.plans.partitioning import driver_rows_df
+from scholar_stream_spark.plans.hybrid import driver_rows_df
 
 
 def write_partitioned(

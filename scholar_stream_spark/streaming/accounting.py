@@ -28,7 +28,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
-from scholar_stream_spark.plans.partitioning import driver_rows_df
+from scholar_stream_spark.plans.hybrid import driver_rows_df
 
 METRICS_SCHEMA = (
     "batch_id string, batch_seq long, n_input long, n_landed long, "

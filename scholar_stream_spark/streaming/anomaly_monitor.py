@@ -36,7 +36,7 @@ from scholar_stream_spark.operators.relational import (
     RATE_Z_THRESHOLD,
     rate_anomalies_from_hourly,
 )
-from scholar_stream_spark.plans.partitioning import driver_rows_df
+from scholar_stream_spark.plans.hybrid import driver_rows_df
 
 _COUNTS_SCHEMA = "event_type string, hour timestamp, n_events long"
 _EMPTY_ERRORS = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")

@@ -41,7 +41,7 @@ from scholar_stream_spark.operators.dedup import (
     incremental_dedup,
     incremental_dedup_bloom,
 )
-from scholar_stream_spark.plans.partitioning import driver_rows_df
+from scholar_stream_spark.plans.hybrid import driver_rows_df
 
 _INDEX_SCHEMA = "fingerprint string"
 _BLOOM_SCHEMA = "word int, bits long"

@@ -17,10 +17,20 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scholar_stream_spark import get_spark  # noqa: E402
+from scholar_stream_spark.plans import hybrid  # noqa: E402
 
 TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMALL = os.path.join(TESTDATA_ROOT, "sf0.001")
 SF_ORACLE = os.path.join(TESTDATA_ROOT, "sf0.01")
+SF_LARGE = os.path.join(TESTDATA_ROOT, "sf0.1")
+
+
+def force_above_cap(monkeypatch):
+    """Send every driver/distributed hybrid built after this call down
+    its distributed branch: each one asks ``hybrid.bounded_probe``,
+    which now reads every input as above its cap (the empty one too)."""
+    monkeypatch.setattr(hybrid, "bounded_probe", lambda df, cap, **kw: None)
+
 
 #: Frozen clock (SURVEY §5.2) — all view tests pin `now` to this.
 FIXED_NOW = "2024-06-01 12:00:00"

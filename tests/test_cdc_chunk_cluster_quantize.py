@@ -19,7 +19,7 @@ from scholar_stream_spark.operators.similarity import (
     QUANT_MAX,
     quantize_embeddings,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, force_above_cap
 
 
 # ---------------------------------------------------------------------------
@@ -192,7 +192,7 @@ def test_neardup_clusters_driver_and_distributed_paths_agree(
 ):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     fast = dedup.neardup_clusters(docs)  # driver union-find path
-    monkeypatch.setattr(dedup, "CC_MAX_DRIVER_EDGES", 0)
+    force_above_cap(monkeypatch)
     slow = dedup.neardup_clusters(docs)  # forced star kernel
     assert sorted(map(tuple, fast.collect())) == sorted(
         map(tuple, slow.collect())

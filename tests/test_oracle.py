@@ -17,8 +17,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
-from scholar_stream_spark.operators import dedup
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_LARGE, SF_ORACLE, force_above_cap
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -28,13 +27,22 @@ TABLES = [
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
-        )
+    """``duck(sf_dir)`` → a DuckDB connection with views over that
+    scale factor's tables, opened once per module."""
+    cons = {}
+
+    def con(sf_dir):
+        if sf_dir not in cons:
+            c = cons[sf_dir] = duckdb.connect()
+            for t in TABLES:
+                c.execute(
+                    f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+                )
+        return cons[sf_dir]
+
     yield con
-    con.close()
+    for c in cons.values():
+        c.close()
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -115,11 +123,14 @@ def _compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame):
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
 
-#: Every query whose plan runs connected components
-#: (``dedup.hybrid_components``). At sf0.01 their pair graphs sit far
-#: below the driver cap, so each runs a second time with the cap at 0:
-#: the distributed star branch a large corpus takes, on whole queries.
-CC_QUERIES = [
+#: Every oracle-backed query whose plan reaches a driver/distributed
+#: hybrid (``plans.hybrid.bounded_probe``): connected components
+#: (``dedup.hybrid_components``), triangles and clustering, degree
+#: assortativity, and the QI ladder report and its enforcement. At
+#: sf0.01 every input sits far below its cap, so each runs a second
+#: time forced above it: the distributed branch a large corpus takes,
+#: on whole queries.
+HYBRID_QUERIES = [
     "audio_dedup_survivors",
     "audio_neardup_clusters",
     "cluster_safe_splits",
@@ -127,31 +138,56 @@ CC_QUERIES = [
     "dedup_clusters",
     "dedup_keep_best",
     "dedup_survivor_map",
+    "generalize_qi_report",
+    "generalize_quasi_identifiers",
     "image_dedup_survivors",
     "image_neardup_clusters",
     "multimodal_dedup_funnel",
+    "nation_assortativity",
+    "nation_clustering",
+    "nation_triangles",
     "snm_entity_clusters",
     "snm_survivor_map",
+    "user_assortativity",
+    "user_clustering",
+    "user_triangles",
     "video_dedup_survivors",
     "video_neardup_clusters",
 ]
-CASES = [pytest.param(n, False, id=n) for n in sorted(QUERIES)] + [
-    pytest.param(n, True, id=f"{n}-above-cap") for n in CC_QUERIES
-]
+#: Queries whose sf0.01 output is empty, so they also run at sf0.1,
+#: where they have rows to compare (on both branches).
+SF_LARGE_QUERIES = ["image_neardup_clusters"]
+CASES = (
+    [pytest.param(n, False, SF_ORACLE, id=n) for n in sorted(QUERIES)]
+    + [
+        pytest.param(n, True, SF_ORACLE, id=f"{n}-above-cap")
+        for n in HYBRID_QUERIES
+    ]
+    + [
+        pytest.param(n, above, SF_LARGE, id=f"{n}-sf0.1{suffix}")
+        for n in SF_LARGE_QUERIES
+        for above, suffix in ((False, ""), (True, "-above-cap"))
+    ]
+)
 
 
-@pytest.mark.parametrize("name,above_cap", CASES)
-def test_query_matches_oracle(name, above_cap, spark, duck, monkeypatch):
+@pytest.mark.parametrize("name,above_cap,sf_dir", CASES)
+def test_query_matches_oracle(
+    name, above_cap, sf_dir, spark, duck, monkeypatch
+):
     if above_cap:
-        monkeypatch.setattr(dedup, "CC_MAX_DRIVER_EDGES", 0)
-    sdf = QUERIES[name](spark, SF_ORACLE)
+        force_above_cap(monkeypatch)
+    sdf = QUERIES[name](spark, sf_dir)
     spark_pdf = sdf.toPandas()
     if name not in ORACLES:
         # rows-only contract: runs, has rows, stable schema
         assert len(spark_pdf.columns) > 0
         assert len(spark_pdf) >= 0
         return
-    duck_pdf = duck.execute(ORACLES[name]).fetchdf()
+    duck_pdf = duck(sf_dir).execute(ORACLES[name]).fetchdf()
+    if sf_dir != SF_ORACLE:
+        # an sf0.1 input exists because sf0.01 is empty: it must not be
+        assert len(duck_pdf) > 0, name
     _compare(name, spark_pdf, duck_pdf)
 
 
@@ -175,7 +211,7 @@ _SPARK_COMPATIBLE_TYPES = {
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_output_types_spark_compatible(name, duck):
-    rows = duck.execute(f"DESCRIBE {ORACLES[name]}").fetchall()
+    rows = duck(SF_ORACLE).execute(f"DESCRIBE {ORACLES[name]}").fetchall()
     bad = [
         (col, typ)
         for col, typ, *_ in rows

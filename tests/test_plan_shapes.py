@@ -105,9 +105,10 @@ def test_chunk_docs_has_no_join_and_at_most_scaleout_shuffle(spark):
 
 def test_shipping_priority_plan_shape(spark):
     """Q3 shape: both date predicates pushed to their fact scans, the
-    segment key list broadcast (no customer shuffle), and the final
-    top-K as TakeOrderedAndProject — a global Sort here materializes
-    the whole aggregate order at 100 TB."""
+    segment key list broadcast at this scale (no customer shuffle; the
+    join carries no hint, AQE picks broadcast from the sizes), and the
+    final top-K as TakeOrderedAndProject — a global Sort here
+    materializes the whole aggregate order at 100 TB."""
     plan = _plan(spark, "shipping_priority")
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     flat = " ".join(pushed)
@@ -116,25 +117,13 @@ def test_shipping_priority_plan_shape(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_shipping_priority_scale_profile_unhints_key_list(spark):
-    """cust_join="auto" must carry NO broadcast hint (AQE owns the
-    build-side decision at scale) while returning the identical top-K."""
-    from scholar_stream_spark.operators import relational
-    from tests.conftest import SF_SMALL as _sf
-
-    def load(spark, name):
-        return spark.read.parquet(f"{_sf}/{name}.parquet")
-
-    li, o, c = load(spark, "lineitem"), load(spark, "orders"), load(
-        spark, "customer"
-    )
-    auto = relational.shipping_priority(li, o, c, cust_join="auto")
-    opt = auto._jdf.queryExecution().optimizedPlan().toString()
-    assert "strategy=broadcast" not in opt, opt
-    hinted = relational.shipping_priority(li, o, c)
-    assert sorted(map(tuple, auto.collect())) == sorted(
-        map(tuple, hinted.collect())
-    )
+def test_shipping_priority_never_hints_key_list(spark):
+    """The key-list join must carry NO broadcast hint: AQE owns the
+    build-side decision, since the key list grows linearly with scale
+    factor and a forced broadcast bypasses autoBroadcastJoinThreshold."""
+    df = QUERIES["shipping_priority"](spark, SF_SMALL)
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "broadcast" not in opt.lower(), opt
 
 
 def test_perplexity_buckets_never_sorts_corpus(spark):
@@ -148,38 +137,29 @@ def test_perplexity_buckets_never_sorts_corpus(spark):
 
 
 def test_remove_dup_spans_never_shuffles_token_table(spark):
-    """The ExactSubstr cut must stay an in-row array filter: in the
-    default (bench/oracle) profile the merged span set broadcasts back
-    onto the tokenized corpus (ONE broadcast hash join) and the token
-    table is never sort-merge-shuffled — the corpus-token-sized
-    explode+regroup this replaced would be the operator's scale
-    killer."""
+    """The ExactSubstr cut must stay an in-row array filter: at this
+    scale the merged span set broadcasts back onto the tokenized
+    corpus (ONE broadcast hash join, chosen by AQE from the sizes) and
+    the token table is never sort-merge-shuffled — the
+    corpus-token-sized explode+regroup this replaced would be the
+    operator's scale killer."""
     plan = _plan(spark, "remove_dup_spans")
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") == 1, plan
 
 
-def test_remove_dup_spans_scale_profile_never_forces_broadcast(spark):
-    """Under ``span_join="shuffle"`` the span table must NOT carry a
-    broadcast hint: span count is corpus-proportional on templated web
-    corpora, and a forced broadcast (which bypasses
-    autoBroadcastJoinThreshold) OOMs at 100 TB. The cut join must plan
-    as a plain equi-join AQE is free to size — i.e. the optimized plan
-    carries no ResolvedHint/broadcast on the span side. AQE may still
-    CHOOSE broadcast at sf0.001 (the table really is tiny there); what
-    we pin is that nothing forces it."""
-    from scholar_stream_spark.operators import dedup
-    from scholar_stream_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    df = dedup.remove_duplicate_spans(docs, span_join="shuffle")
+def test_remove_dup_spans_never_forces_broadcast(spark):
+    """The span table must NOT carry a broadcast hint: span count is
+    corpus-proportional on templated web corpora, and a forced
+    broadcast (which bypasses autoBroadcastJoinThreshold) OOMs at
+    100 TB. The cut join must plan as a plain equi-join AQE is free to
+    size — i.e. the optimized plan carries no ResolvedHint/broadcast on
+    the span side. AQE still CHOOSES broadcast at sf0.001 (the table
+    really is tiny there, pinned above); what we pin here is that
+    nothing forces it."""
+    df = QUERIES["remove_dup_spans"](spark, SF_SMALL)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "broadcast" not in optimized.lower(), optimized
-    # values identical to the broadcast profile (join strategy only)
-    base = dedup.remove_duplicate_spans(docs, span_join="broadcast")
-    assert sorted(map(tuple, df.collect())) == sorted(
-        map(tuple, base.collect())
-    )
 
 
 def test_decontaminate_and_incremental_never_sortmerge(spark):

@@ -19,6 +19,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from scholar_stream_spark.operators import dedup
+from tests.conftest import force_above_cap
 
 edge = st.tuples(
     st.integers(min_value=0, max_value=14),
@@ -59,14 +60,15 @@ def test_cc_kernels_match_union_find(spark, edges):
     df = spark.createDataFrame(edges, "d1 long, d2 long")
     want = _reference_labels(edges)
     sizes = Counter(want.values())
-    for cap in (dedup.CC_MAX_DRIVER_EDGES, 0):  # driver, then star
+    for forced in (False, True):  # driver, then star
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(dedup, "CC_MAX_DRIVER_EDGES", cap)
+            if forced:
+                force_above_cap(mp)
             got = {
                 r["node"]: (r["lbl"], r["size"])
                 for r in dedup.hybrid_components(df).collect()
             }
         assert got == {n: (lbl, sizes[lbl]) for n, lbl in want.items()}, (
-            cap,
+            forced,
             edges,
         )

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scholar_stream_spark.operators import graph
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, force_above_cap
 
 
 @pytest.fixture(scope="module")
@@ -556,17 +556,16 @@ def test_kcore_hub_of_leaves_is_periphery(spark):
     assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 1, 5: 1}
 
 
-def test_kcore_rejects_degenerate(trade_tabs):
+def test_kcore_rejects_degenerate(trade_tabs, monkeypatch):
     with pytest.raises(ValueError, match="max_iter"):
         graph.trade_kcore(*trade_tabs, max_iter=0)
     with pytest.raises(RuntimeError, match="did not converge"):
         # 1 round cannot reach the fixpoint on a graph whose h-index
-        # sequence needs >1 step; max_driver_edges=0 forces the
-        # DISTRIBUTED path (the r17 hybrid would otherwise peel this
-        # grid-sized graph on the driver and never hit the cap)
-        graph.trade_kcore(
-            *trade_tabs, max_iter=1, max_driver_edges=0
-        )
+        # sequence needs >1 step; forcing the DISTRIBUTED path (the
+        # r17 hybrid would otherwise peel this grid-sized graph on the
+        # driver and never hit the round cap)
+        force_above_cap(monkeypatch)
+        graph.trade_kcore(*trade_tabs, max_iter=1)
 
 
 # ---------------------------------------------------------------

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scholar_stream_spark.operators import graph, temporal
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, force_above_cap
 
 
 # ---------------------------------------------------------------
@@ -493,11 +493,11 @@ def test_image_neardup_clusters_bruteforce_on_real_docs(spark):
     assert got == want
 
 
-def test_kcore_hybrid_paths_agree(events_df, ref_coact):
+def test_kcore_hybrid_paths_agree(events_df, ref_coact, monkeypatch):
     """r17 hybrid (measured: the distributed fixpoint spent 10.8 s on
     a 142k-edge graph the driver peels in milliseconds): the driver
     Matula–Beck path (default) and the distributed h-index path
-    (forced via max_driver_edges=0) must emit identical coreness on
+    (forced above the cap) must emit identical coreness on
     the real co-activity graph, and both must match the brute-force
     reference."""
     _, adj = ref_coact
@@ -506,9 +506,10 @@ def test_kcore_hybrid_paths_agree(events_df, ref_coact):
         r["user_id"]: r["coreness"]
         for r in graph.user_kcore(events_df).collect()
     }
+    force_above_cap(monkeypatch)
     dist = {
         r["user_id"]: r["coreness"]
-        for r in graph.user_kcore(events_df, max_driver_edges=0).collect()
+        for r in graph.user_kcore(events_df).collect()
     }
     assert driver == want
     assert dist == want

@@ -25,7 +25,7 @@ from scholar_stream_spark.operators import (
     similarity,
     temporal,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, force_above_cap
 
 
 @pytest.fixture(scope="module")
@@ -57,9 +57,9 @@ def _edges_df(spark):
     )
 
 
-def test_pagerank_hybrid_paths_agree(spark):
+def test_pagerank_hybrid_paths_agree(spark, monkeypatch):
     """Driver numpy path (default under the edge probe) vs the
-    distributed loop (forced via max_driver_edges=0): same ranks and
+    distributed loop (forced above the cap): same ranks and
     same residual up to float re-association — the indeterminacy the
     distributed path itself has across partitionings."""
     df = _edges_df(spark)
@@ -69,11 +69,10 @@ def test_pagerank_hybrid_paths_agree(spark):
             df, n_iter=8, with_residual=True
         ).collect()
     }
+    force_above_cap(monkeypatch)
     dist = {
         r["node"]: (r["pr"], r["residual"])
-        for r in graph.pagerank(
-            df, n_iter=8, with_residual=True, max_driver_edges=0
-        ).collect()
+        for r in graph.pagerank(df, n_iter=8, with_residual=True).collect()
     }
     assert set(drv) == set(dist)
     for node, (pr, res) in drv.items():
@@ -81,12 +80,10 @@ def test_pagerank_hybrid_paths_agree(spark):
         assert dist[node][1] == pytest.approx(res, abs=1e-12)
 
 
-def test_nation_pagerank_hybrid_display_grain(trade_tabs):
+def test_nation_pagerank_hybrid_display_grain(trade_tabs, monkeypatch):
     """On the real trade graph the two paths must agree exactly at the
     registered entry's display grain (round 6 + round-9 residual)."""
     rev = graph._nation_revenue_edges(*trade_tabs)
-    drv = graph.pagerank(rev, with_residual=True)
-    dist = graph.pagerank(rev, with_residual=True, max_driver_edges=0)
 
     def grain(df):
         return {
@@ -94,20 +91,21 @@ def test_nation_pagerank_hybrid_display_grain(trade_tabs):
             for r in df.collect()
         }
 
-    assert grain(drv) == grain(dist)
+    drv = grain(graph.pagerank(rev, with_residual=True))
+    force_above_cap(monkeypatch)
+    assert drv == grain(graph.pagerank(rev, with_residual=True))
 
 
-def test_hits_hybrid_paths_agree(spark):
+def test_hits_hybrid_paths_agree(spark, monkeypatch):
     df = _edges_df(spark)
     drv = {
         r["node"]: (r["hub"], r["authority"], r["residual"])
         for r in graph.hits(df, n_iter=6, with_residual=True).collect()
     }
+    force_above_cap(monkeypatch)
     dist = {
         r["node"]: (r["hub"], r["authority"], r["residual"])
-        for r in graph.hits(
-            df, n_iter=6, with_residual=True, max_driver_edges=0
-        ).collect()
+        for r in graph.hits(df, n_iter=6, with_residual=True).collect()
     }
     assert set(drv) == set(dist)
     for node, vals in drv.items():
@@ -115,17 +113,17 @@ def test_hits_hybrid_paths_agree(spark):
             assert got == pytest.approx(want, abs=1e-12)
 
 
-def test_hits_hybrid_n_iter_1_residual_null_both_paths(spark):
+def test_hits_hybrid_n_iter_1_residual_null_both_paths(spark, monkeypatch):
     """The n_iter=1 NULL-residual contract must hold on BOTH paths."""
     df = _edges_df(spark)
-    for kw in ({}, {"max_driver_edges": 0}):
-        rows = graph.hits(
-            df, n_iter=1, with_residual=True, **kw
-        ).collect()
+    for forced in (False, True):
+        if forced:
+            force_above_cap(monkeypatch)
+        rows = graph.hits(df, n_iter=1, with_residual=True).collect()
         assert all(r["residual"] is None for r in rows)
 
 
-def test_nation_hits_hybrid_display_grain(trade_tabs):
+def test_nation_hits_hybrid_display_grain(trade_tabs, monkeypatch):
     rev = graph._nation_revenue_edges(*trade_tabs)
 
     def grain(df):
@@ -134,9 +132,9 @@ def test_nation_hits_hybrid_display_grain(trade_tabs):
             for r in df.collect()
         }
 
-    assert grain(graph.hits(rev)) == grain(
-        graph.hits(rev, max_driver_edges=0)
-    )
+    drv = grain(graph.hits(rev))
+    force_above_cap(monkeypatch)
+    assert drv == grain(graph.hits(rev))
 
 
 # ---------------------------------------------------------------
@@ -228,9 +226,7 @@ _TRI_EDGES = [
 def test_triangle_census_hybrid_paths_identical(spark, monkeypatch):
     und = _und_df(spark, _TRI_EDGES)
     drv = graph.triangle_census(und).collect()
-    monkeypatch.setattr(
-        graph, "_triangle_probe", lambda u, **kw: None
-    )
+    force_above_cap(monkeypatch)
     dist = graph.triangle_census(und).collect()
     assert [tuple(r) for r in drv] == [tuple(r) for r in dist]
     assert drv[0]["n_triangles"] == 2
@@ -239,9 +235,7 @@ def test_triangle_census_hybrid_paths_identical(spark, monkeypatch):
 def test_local_clustering_hybrid_paths_identical(spark, monkeypatch):
     und = _und_df(spark, _TRI_EDGES)
     drv = [tuple(r) for r in graph.local_clustering(und).collect()]
-    monkeypatch.setattr(
-        graph, "_triangle_probe", lambda u, **kw: None
-    )
+    force_above_cap(monkeypatch)
     dist = [tuple(r) for r in graph.local_clustering(und).collect()]
     assert drv == dist
     by_node = {t[0]: t for t in drv}
@@ -254,7 +248,7 @@ def test_local_clustering_hybrid_paths_identical(spark, monkeypatch):
 def test_assortativity_hybrid_paths_identical(spark, monkeypatch):
     und = _und_df(spark, _TRI_EDGES)
     drv = [tuple(r) for r in graph.assortativity(und).collect()]
-    monkeypatch.setattr(graph, "_assort_probe", lambda u, **kw: None)
+    force_above_cap(monkeypatch)
     dist = [tuple(r) for r in graph.assortativity(und).collect()]
     assert drv == dist
     assert drv[0][0] == len(_TRI_EDGES)
@@ -267,9 +261,7 @@ def test_assortativity_probe_shapes_and_caps(spark):
     assert graph.assortativity(star).collect()[0]["assortativity"] == -1.0
     tri = _und_df(spark, [(1, 2), (2, 3), (1, 3)])
     assert graph.assortativity(tri).collect()[0]["assortativity"] is None
-    # probe discipline: over-cap and empty both decline (None)
-    und = _und_df(spark, _TRI_EDGES)
-    assert graph._assort_probe(und, edge_cap=3) is None
+    # the empty graph declines (None): the distributed aggregate owns it
     assert graph._assort_probe(_und_df(spark, [])) is None
     # moments match the distributed aggregate's definition on a path
     # graph 1-2-3: degs (1,2,1); stubs m2=4, sjk=2*(2+2)=... exact:
@@ -279,14 +271,28 @@ def test_assortativity_probe_shapes_and_caps(spark):
     assert (m2, sjk, sj, sj2) == (4, 8, 6, 10)
 
 
-def test_triangle_probe_caps(spark):
+def test_triangle_probe_caps(spark, monkeypatch):
     und = _und_df(spark, _TRI_EDGES)
-    assert graph._triangle_probe(und, edge_cap=3) is None
-    assert graph._triangle_probe(und, node_cap=3) is None
     empty = _und_df(spark, [])
     assert graph._triangle_probe(empty) is None
     probe = graph._triangle_probe(und)
     assert probe is not None and probe[3] == len(_TRI_EDGES)
+    # 7 nodes: the node cap declines even though the edges fit
+    monkeypatch.setattr(graph, "TRIANGLE_DRIVER_NODE_CAP", 3)
+    assert graph._triangle_probe(und) is None
+
+
+def test_bounded_probe_bound(spark):
+    """The one probe rule: the rows when at most ``cap`` of them, else
+    ``None``, as Rows or as one Arrow batch."""
+    from scholar_stream_spark.plans import hybrid
+
+    four = _und_df(spark, [(1, 2), (1, 3), (2, 3), (3, 4)])
+    assert hybrid.bounded_probe(four, 3) is None
+    assert hybrid.bounded_probe(four, 3, arrow=True) is None
+    assert len(hybrid.bounded_probe(four, 4)) == 4
+    assert len(hybrid.bounded_probe(four, 4, arrow=True)) == 4
+    assert hybrid.bounded_probe(_und_df(spark, []), 3) == []
 
 
 def test_user_graph_kernels_match_distributed_at_sf_small(
@@ -297,9 +303,7 @@ def test_user_graph_kernels_match_distributed_at_sf_small(
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     drv_c = [tuple(r) for r in graph.user_clustering(ev).collect()]
     drv_t = [tuple(r) for r in graph.user_triangles(ev).collect()]
-    monkeypatch.setattr(
-        graph, "_triangle_probe", lambda u, **kw: None
-    )
+    force_above_cap(monkeypatch)
     assert drv_c == [
         tuple(r) for r in graph.user_clustering(ev).collect()
     ]
@@ -326,29 +330,30 @@ def tiny_embeddings(spark):
 
 
 def test_train_rows_probe_is_bounded(tiny_embeddings, spark):
-    rows = similarity._train_rows(tiny_embeddings, cap=100)
+    rows = similarity._train_rows(tiny_embeddings)
     assert rows is not None and len(rows) == 48
-    assert similarity._train_rows(tiny_embeddings, cap=10) is None
     empty = spark.createDataFrame(
         [], "vec_id long, embedding array<double>"
     )
-    assert similarity._train_rows(empty, cap=10) is None
+    assert similarity._train_rows(empty) is None
 
 
-def test_pq_trainer_hybrid_paths_agree(tiny_embeddings):
-    rows = similarity._train_rows(tiny_embeddings)
-    cb_drv, cnt_drv = similarity._pq_train_codebook(
-        tiny_embeddings, m=2, k=4, n_iters=3, recount=True, rows=rows
-    )
-    cb_dst, cnt_dst = similarity._pq_train_codebook(
-        tiny_embeddings, m=2, k=4, n_iters=3, recount=True, rows=None
-    )
+def test_pq_trainer_hybrid_paths_agree(tiny_embeddings, monkeypatch):
+    def train():
+        return similarity._pq_train_codebook(
+            tiny_embeddings, m=2, k=4, n_iters=3, recount=True,
+            rows=similarity._train_rows(tiny_embeddings),
+        )
+
+    cb_drv, cnt_drv = train()
+    force_above_cap(monkeypatch)
+    cb_dst, cnt_dst = train()
     assert (cnt_drv == cnt_dst).all()
     np.testing.assert_allclose(cb_drv, cb_dst, rtol=0, atol=1e-12)
 
 
 def test_opq_iterative_hybrid_paths_bit_identical_same_batching(
-    tiny_embeddings,
+    tiny_embeddings, monkeypatch
 ):
     """With IDENTICAL batching (one partition = one Arrow batch = the
     driver path's whole-matrix call) the two paths are bit-identical —
@@ -363,33 +368,38 @@ def test_opq_iterative_hybrid_paths_bit_identical_same_batching(
     indeterminacy class; on the real corpora every registered query
     was verified md5-identical at sf0.001/0.01/0.1.)"""
     one = tiny_embeddings.repartition(1)
-    rows = similarity._train_rows(one)
-    r_drv = similarity._opq_rotation_iterative(
-        one, m=2, k_star=4, n_iter=2, rows=rows
-    )
-    r_dst = similarity._opq_rotation_iterative(
-        one, m=2, k_star=4, n_iter=2, rows=None
-    )
+
+    def rotation():
+        return similarity._opq_rotation_iterative(
+            one, m=2, k_star=4, n_iter=2, rows=similarity._train_rows(one)
+        )
+
+    r_drv = rotation()
+    force_above_cap(monkeypatch)
+    r_dst = rotation()
     assert (r_drv == r_dst).all()
     np.testing.assert_allclose(
         r_drv @ r_drv.T, np.eye(8), rtol=0, atol=1e-10
     )
 
 
-def test_gram_stats_hybrid_exact(tiny_embeddings):
+def test_gram_stats_hybrid_exact(tiny_embeddings, monkeypatch):
     """Same-batching ⇒ EXACT equality; across batchings the fsum fold
     keeps the two paths within float-association distance (the same
     tolerance the distributed path has to itself under repartition)."""
     one = tiny_embeddings.repartition(1)
-    n1, s1, g1 = similarity._gram_stats(
-        one, rows=similarity._train_rows(one)
-    )
-    n2, s2, g2 = similarity._gram_stats(one, rows=None)
+
+    def stats(df):
+        return similarity._gram_stats(df, rows=similarity._train_rows(df))
+
+    n1, s1, g1 = stats(one)
+    force_above_cap(monkeypatch)
+    n2, s2, g2 = stats(one)
     assert n1 == n2
     assert (s1 == s2).all()
     assert (g1 == g2).all()
     # multi-batch distributed vs driver: association-level agreement
-    n3, s3, g3 = similarity._gram_stats(tiny_embeddings, rows=None)
+    n3, s3, g3 = stats(tiny_embeddings)
     assert n3 == n1
     np.testing.assert_allclose(s3, s1, rtol=0, atol=1e-12)
     np.testing.assert_allclose(g3, g1, rtol=0, atol=1e-12)
@@ -406,9 +416,7 @@ def test_cluster_embeddings_hybrid_assignments_identical(
             tiny_embeddings, n_clusters=4, n_iters=3
         ).collect()
     }
-    monkeypatch.setattr(
-        similarity, "_train_rows", lambda df, cap=0: None
-    )
+    force_above_cap(monkeypatch)
     dist = {
         r["vec_id"]: (r["cluster_id"], r["cos_to_centroid"])
         for r in similarity.cluster_embeddings(
@@ -432,9 +440,7 @@ def test_ann_pq_topk_hybrid_results_identical(
             tiny_embeddings, topk=3, n_queries=4, m=2, k_star=4
         )
     )
-    monkeypatch.setattr(
-        similarity, "_train_rows", lambda df, cap=0: None
-    )
+    force_above_cap(monkeypatch)
     dist = grain(
         similarity.ann_pq_topk(
             tiny_embeddings, topk=3, n_queries=4, m=2, k_star=4
@@ -454,7 +460,7 @@ def test_driver_rows_df_value_and_slice_contract(spark):
     32-slice tiny table pays 32 Python-worker round-trips in any
     single-task consumer (a 256-row ``coalesce(1)`` codebook write
     measured 4.4 s vs 0.31 s at one slice)."""
-    from scholar_stream_spark.plans.partitioning import driver_rows_df
+    from scholar_stream_spark.plans.hybrid import driver_rows_df
 
     rows = [(i, f"s{i}", [float(i), float(i + 1)]) for i in range(257)]
     schema = "id long, name string, vec array<double>"
@@ -500,7 +506,7 @@ def test_bpe_train_hybrid_paths_identical(spark, monkeypatch):
 
     docs = _bpe_docs(spark)
     fast = textops.bpe_train(docs, n_merges=6).collect()
-    monkeypatch.setattr(textops, "BPE_DRIVER_VOCAB_CAP", 0)
+    force_above_cap(monkeypatch)
     slow = textops.bpe_train(docs, n_merges=6).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
     assert len(fast) > 0
@@ -513,7 +519,7 @@ def test_bpe_train_batched_hybrid_paths_identical(spark, monkeypatch):
 
     docs = _bpe_docs(spark)
     fast = textops.bpe_train_batched(docs, n_merges=6, batch=3).collect()
-    monkeypatch.setattr(textops, "BPE_DRIVER_VOCAB_CAP", 0)
+    force_above_cap(monkeypatch)
     slow = textops.bpe_train_batched(docs, n_merges=6, batch=3).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
     assert len(fast) > 0
@@ -529,7 +535,7 @@ def test_snm_members_hybrid_paths_identical(spark, monkeypatch):
     part = spark.createDataFrame(rows, "p_name string")
     fast = dedup.snm_entity_clusters(part).collect()
     fast_map = dedup.snm_survivor_map(part).collect()
-    monkeypatch.setattr(dedup, "CC_MAX_DRIVER_EDGES", 0)
+    force_above_cap(monkeypatch)
     slow = dedup.snm_entity_clusters(part).collect()
     slow_map = dedup.snm_survivor_map(part).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scholar_stream_spark.operators import masking
+from tests.conftest import force_above_cap
 
 
 @pytest.fixture(scope="module")
@@ -40,14 +41,14 @@ def qi_fixture(spark):
 
 def test_qi_report_hybrid_paths_identical(spark, qi_fixture, monkeypatch):
     """The r18 driver fast path of generalize_qi_report must emit the
-    SAME report rows as the distributed level-keyed rollups (cap
-    forced below the grid so the probe declines)."""
+    SAME report rows as the distributed level-keyed rollups (forced
+    above the cap)."""
     customer, nation = qi_fixture
     fast = sorted(
         tuple(r) for r in
         masking.generalize_qi_report(customer, nation).collect()
     )
-    monkeypatch.setattr(masking, "QI_REPORT_DRIVER_CAP", -1)
+    force_above_cap(monkeypatch)
     slow = sorted(
         tuple(r) for r in
         masking.generalize_qi_report(customer, nation).collect()
@@ -84,7 +85,7 @@ def test_qi_enforce_unchanged_by_fast_path(spark, qi_fixture, monkeypatch):
             customer, nation, **kw
         ).collect()
     )
-    monkeypatch.setattr(masking, "QI_REPORT_DRIVER_CAP", -1)
+    force_above_cap(monkeypatch)
     slow = sorted(
         tuple(r) for r in masking.generalize_quasi_identifiers(
             customer, nation, **kw
@@ -93,7 +94,7 @@ def test_qi_enforce_unchanged_by_fast_path(spark, qi_fixture, monkeypatch):
     assert fast == slow
 
 
-def test_pagerank_probe_validation_contract(spark):
+def test_pagerank_probe_validation_contract(spark, monkeypatch):
     """r18 moved pagerank/hits validation onto the probe rows below
     the cap — the error contract must hold on BOTH paths."""
     from scholar_stream_spark.operators import graph
@@ -101,19 +102,18 @@ def test_pagerank_probe_validation_contract(spark):
     bad = spark.createDataFrame(
         [(1, 2, 0.0)], "src long, dst long, weight double"
     )
-    with pytest.raises(ValueError, match="positive and non-NULL"):
-        graph.pagerank(bad)
-    with pytest.raises(ValueError, match="positive and non-NULL"):
-        graph.pagerank(bad, max_driver_edges=0)  # distributed path
     empty = bad.filter("src < 0")
-    with pytest.raises(ValueError, match="empty edge list"):
-        graph.pagerank(empty)
-    with pytest.raises(ValueError, match="hits: empty edge list"):
-        graph.hits(empty)
-    with pytest.raises(ValueError, match="positive and non-NULL"):
-        graph.hits(bad)
-    with pytest.raises(ValueError, match="positive and non-NULL"):
-        graph.hits(bad, max_driver_edges=0)
+    for forced in (False, True):  # driver, then distributed path
+        if forced:
+            force_above_cap(monkeypatch)
+        with pytest.raises(ValueError, match="positive and non-NULL"):
+            graph.pagerank(bad)
+        with pytest.raises(ValueError, match="empty edge list"):
+            graph.pagerank(empty)
+        with pytest.raises(ValueError, match="hits: empty edge list"):
+            graph.hits(empty)
+        with pytest.raises(ValueError, match="positive and non-NULL"):
+            graph.hits(bad)
 
 
 def test_vectorized_dhash_lanes_match_scalar_reference():
