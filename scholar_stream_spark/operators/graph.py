@@ -102,11 +102,13 @@ def pagerank(
     # fact-table star join) and feeds FOUR consumers below (validation,
     # node spine, out-weights, normalization) — checkpoint it once
     edges = edges.localCheckpoint(eager=False)
+    # checkpointed on the distributed branch only: under AQE even a lazy
+    # checkpoint runs the distinct's stage, and the driver branch reads
+    # nothing but the spine's schema
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     out_w = edges.groupBy("src").agg(
         F.sum(F.col("weight").cast("double")).alias("_wout")
@@ -187,6 +189,7 @@ def pagerank(
             has_dangling=has_dangling,
             with_residual=with_residual,
         )
+    nodes = nodes.localCheckpoint(eager=False)
     # distributed path: ONE 1-row aggregate carries weight validation
     # and the distinct source count (the hits() consolidation, r16
     # ADVICE item 3): the dangling test below becomes arithmetic
@@ -1380,11 +1383,11 @@ def hits(
     if n_iter < 1:
         raise ValueError(f"hits: n_iter must be >= 1, got {n_iter}")
     edges = edges.localCheckpoint(eager=False)
+    # checkpointed on the distributed branch only (see `pagerank`)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     w_edges = edges.select(
         "src", "dst", F.col("weight").cast("double").alias("_w")
@@ -1420,6 +1423,7 @@ def hits(
             n_iter,
             with_residual=with_residual,
         )
+    nodes = nodes.localCheckpoint(eager=False)
     # distributed path: ONE eager action validates and sizes
     # everything the loop needs: empty-input check (n_edges), weight
     # validation (n_bad), and the hub-seed denominator (n_hubs) come

@@ -22,6 +22,16 @@ Session-level decisions (why each config):
   operators that KNOW a side is small hint ``broadcast()`` explicitly.
 - Arrow enabled: every pandas interchange (``toPandas``, pandas UDFs,
   ``mapInPandas`` in the multimodal ops) goes through Arrow batches.
+- ``spark.sql.shuffle.partitions`` follows the master. On a ``local``
+  master it is the master's thread count (``defaultParallelism``): the
+  reference serves small reads on one machine, where each stage costs
+  its task count in scheduling, not data, so 32 tasks on 4 threads ran
+  8 waves of near-empty tasks for every shuffle and every
+  ``scale_out`` repartition. On any other master it stays at
+  ``DEFAULT_SHUFFLE_PARTITIONS``: a cluster's core count is not known
+  when the session starts, executors come and go, and at 100 TB AQE
+  coalesces the 32-way shuffle down or splits skew up at run time.
+  An explicit ``shuffle_partitions`` always wins.
 """
 
 from __future__ import annotations
@@ -30,10 +40,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Default shuffle parallelism for local runs. On a real cluster this is
+#: Shuffle parallelism on a non-local master. On a real cluster this is
 #: sized to ~2-3x total executor cores (or left to AQE's
 #: ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``).
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+
+def derived_shuffle_partitions(master: str, default_parallelism: int) -> int:
+    """Shuffle parallelism for a session on ``master`` whose context
+    reports ``default_parallelism``: the local thread count on a
+    ``local`` master, ``DEFAULT_SHUFFLE_PARTITIONS`` elsewhere."""
+    if master.startswith("local"):
+        return default_parallelism
+    return DEFAULT_SHUFFLE_PARTITIONS
 
 
 def get_spark(
@@ -47,19 +66,17 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract)
     so bench/test runs use the provisioned cores; on a real cluster the
     caller passes the cluster master / relies on spark-submit.
+    ``shuffle_partitions`` defaults to ``derived_shuffle_partitions``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -85,6 +102,19 @@ def get_spark(
         # UI is dead weight in tests/bench containers.
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {}
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        # the thread count is only known once the context is up
+        # (``local[*]``); the conf is a runtime one, so set it now
+        sc = spark.sparkContext
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(derived_shuffle_partitions(sc.master, sc.defaultParallelism)),
+        )
+    return spark

@@ -41,7 +41,6 @@ def spark():
     s = get_spark(
         app_name="scholar-stream-spark-tests",
         master="local[4]",
-        shuffle_partitions=4,
     )
     yield s
     s.stop()
