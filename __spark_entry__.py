@@ -1202,20 +1202,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "window_rank_suite": lambda s, d: relational.window_rank_suite(
             _t(s, d, "events")
         ),
-        # RFM segmentation: rank-exact global quintile scores -> cells.
-        # scale profile is the DEFAULT (r16): the oracle profile's
-        # global quintile windows run over the per-CUSTOMER rollup —
-        # corpus-cardinality through one task at 100 TB; the
-        # ranked_by_range swap is value-identical (pinned) and lives in
-        # profile_pairs for the bench delta
+        # RFM segmentation: rank-exact global quintile scores -> cells
         "rfm_segments": lambda s, d: relational.rfm_segments(
-            _t(s, d, "orders"), profile="scale"
+            _t(s, d, "orders")
         ),
         # two-period value-tier flow matrix (churn/upsell review);
-        # tier 0 = absent that period. scale default for the same
-        # reason as rfm_segments (per-customer tier windows)
+        # tier 0 = absent that period
         "segment_migration": lambda s, d: relational.segment_migration(
-            _t(s, d, "orders"), profile="scale"
+            _t(s, d, "orders")
         ),
         # median/MAD robust outlier screen (rank-exact selections)
         "mad_outliers": lambda s, d: relational.mad_outliers(
@@ -1250,12 +1244,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         ),
         # ABC (Pareto) inventory classification — exact-decimal
-        # cumulative-share boundaries. scale default (r16): the oracle
-        # profile's cumulative window runs over the per-PART rollup
-        # (dimension-cardinality, grows with SF); prefix_sum_by_range
-        # is value-identical (pinned)
+        # cumulative-share boundaries
         "pareto_parts": lambda s, d: relational.pareto_parts(
-            _t(s, d, "lineitem"), profile="scale"
+            _t(s, d, "lineitem")
         ),
         # month-over-month revenue trend (exact-decimal sums, lag
         # window over the <=|months| aggregate)
@@ -1372,11 +1363,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "sessionize": lambda s, d: temporal.sessionize(_t(s, d, "events")),
         # sweep-line concurrency profile over the sessionized stream
-        # ("how many users at once, for how long"); scale profile =
-        # prefix_sum_by_range + rank+1 join, window form pinned
-        # value-identical in profile_pairs
+        # ("how many users at once, for how long")
         "session_concurrency": lambda s, d: temporal.session_concurrency(
-            _t(s, d, "events"), profile="scale"
+            _t(s, d, "events")
         ),
         # damped weighted PageRank over the nation trade graph (which
         # nations are CENTRAL, not just high-volume); rows-only —
@@ -1971,23 +1960,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             masking.suppress_small_classes(_t(s, d, "customer"))
         ),
         # Heaps'-law bigram vocabulary-growth curve by corpus decile
-        # (the unseen-vocabulary signal read before freezing a vocab).
-        # Default profile is the SCALE form: the decile assignment
-        # ranks the raw corpus, so the single-total-order window
-        # variant is exactly what the fleet plan audit bans (global
-        # Window over a bare scan) — ranked_by_range is the honest
-        # default; the window form lives in profile_pairs, pinned
-        # value-identical
+        # (the unseen-vocabulary signal read before freezing a vocab)
         "vocab_growth": lambda s, d: textops.vocab_growth(
-            _t(s, d, "documents"), profile="scale"
+            _t(s, d, "documents")
         ),
         # Zipf rank-frequency OLS fit over the bigram type-frequency
-        # table (corpus-health next to vocab_growth's Heaps curve);
-        # scale profile = ranked_by_range rank, window form pinned
-        # value-identical in profile_pairs
-        "zipf_fit": lambda s, d: textops.zipf_fit(
-            _t(s, d, "documents"), profile="scale"
-        ),
+        # table (corpus-health next to vocab_growth's Heaps curve)
+        "zipf_fit": lambda s, d: textops.zipf_fit(_t(s, d, "documents")),
     }
     # apply the driver-cap rotation: _DRIVER_FIRST (least-recently-
     # driver-checked oracle-backed entries first — computed, not
@@ -2004,10 +1983,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def profile_pairs() -> dict[str, dict[str, Callable[[SparkSession, str], DataFrame]]]:
     """The operators that carry BOTH a portable/oracle profile (exact
     paper semantics, mirrored by the SQL oracle — what ``queries()``
-    runs) and a ``scale`` profile (hot-shingle df cap, xxhash64 fast
-    hashes, SemDeDup cluster-pairing sub-split, star-kernel CC). The
-    scale paths are correctness-pinned in pytest; ``bench.py`` times
-    each pair both ways so the profile deltas are measured, not
+    runs) and a ``scale`` profile (xxhash64 fast hashes, the hot-shingle
+    doc-freq cap, the SemDeDup cluster-pairing cap). Each scale path
+    trades recall or exactness for speed, so the two give different
+    outputs; they are correctness-pinned in pytest, and ``bench.py``
+    times each pair both ways so the deltas are measured, not
     asserted."""
     docs = lambda s, d: _t(s, d, "documents")  # noqa: E731
     return {
@@ -2057,113 +2037,6 @@ def profile_pairs() -> dict[str, dict[str, Callable[[SparkSession, str], DataFra
             "oracle": lambda s, d: dedup.neardup_clusters(docs(s, d)),
             "scale": lambda s, d: dedup.neardup_clusters(
                 docs(s, d), profile="scale"
-            ),
-        },
-        # round-12 split (r11 verdict follow-through): the rank-exact
-        # family's documented repartitionByRange + per-partition-offset
-        # swap made real — the scale profile replaces single-task
-        # per-key total-order windows with ranked_by_range (value-
-        # identical, pinned in tests/test_r12_ops.py)
-        "mad_outliers": {
-            "oracle": lambda s, d: relational.mad_outliers(
-                _t(s, d, "events")
-            ),
-            "scale": lambda s, d: relational.mad_outliers(
-                _t(s, d, "events"), profile="scale"
-            ),
-        },
-        "shipping_delay_profile": {
-            "oracle": lambda s, d: relational.shipping_delay_profile(
-                _t(s, d, "orders"), _t(s, d, "lineitem")
-            ),
-            "scale": lambda s, d: relational.shipping_delay_profile(
-                _t(s, d, "orders"), _t(s, d, "lineitem"),
-                profile="scale",
-            ),
-        },
-        # cumulative-sum sibling: prefix_sum_by_range vs the
-        # single-task global window (exact decimals both ways)
-        "pareto_parts": {
-            "oracle": lambda s, d: relational.pareto_parts(
-                _t(s, d, "lineitem")
-            ),
-            "scale": lambda s, d: relational.pareto_parts(
-                _t(s, d, "lineitem"), profile="scale"
-            ),
-        },
-        "rfm_segments": {
-            "oracle": lambda s, d: relational.rfm_segments(
-                _t(s, d, "orders")
-            ),
-            "scale": lambda s, d: relational.rfm_segments(
-                _t(s, d, "orders"), profile="scale"
-            ),
-        },
-        "segment_migration": {
-            "oracle": lambda s, d: relational.segment_migration(
-                _t(s, d, "orders")
-            ),
-            "scale": lambda s, d: relational.segment_migration(
-                _t(s, d, "orders"), profile="scale"
-            ),
-        },
-        # spine-rank siblings: single-total-order window vs
-        # ranked_by_range on the distinct-name / doc-id spines
-        "snm_candidate_pairs": {
-            "oracle": lambda s, d: dedup.snm_candidate_pairs(
-                _t(s, d, "part")
-            ),
-            "scale": lambda s, d: dedup.snm_candidate_pairs(
-                _t(s, d, "part"), profile="scale"
-            ),
-        },
-        "vocab_growth": {
-            "oracle": lambda s, d: textops.vocab_growth(
-                _t(s, d, "documents")
-            ),
-            "scale": lambda s, d: textops.vocab_growth(
-                _t(s, d, "documents"), profile="scale"
-            ),
-        },
-        "zipf_fit": {
-            "oracle": lambda s, d: textops.zipf_fit(
-                _t(s, d, "documents")
-            ),
-            "scale": lambda s, d: textops.zipf_fit(
-                _t(s, d, "documents"), profile="scale"
-            ),
-        },
-        "session_concurrency": {
-            "oracle": lambda s, d: temporal.session_concurrency(
-                _t(s, d, "events")
-            ),
-            "scale": lambda s, d: temporal.session_concurrency(
-                _t(s, d, "events"), profile="scale"
-            ),
-        },
-        "quality_deciles": {
-            "oracle": lambda s, d: curation.quality_deciles(docs(s, d)),
-            "scale": lambda s, d: curation.quality_deciles(
-                docs(s, d), profile="scale"
-            ),
-        },
-        "revenue_concentration": {
-            "oracle": lambda s, d: relational.revenue_concentration(
-                _t(s, d, "orders"), _t(s, d, "customer"), _t(s, d, "nation")
-            ),
-            "scale": lambda s, d: relational.revenue_concentration(
-                _t(s, d, "orders"),
-                _t(s, d, "customer"),
-                _t(s, d, "nation"),
-                profile="scale",
-            ),
-        },
-        "window_rank_suite": {
-            "oracle": lambda s, d: relational.window_rank_suite(
-                _t(s, d, "events")
-            ),
-            "scale": lambda s, d: relational.window_rank_suite(
-                _t(s, d, "events"), profile="scale"
             ),
         },
         "semantic_prune": {

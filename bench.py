@@ -15,10 +15,8 @@ driver, so timings measure the engine, not ``collect()`` serialization.
 A tiny warm-up query first absorbs one-time JVM/codegen startup so
 per-query numbers are comparable across runs.
 
-The JSON line also carries a ``streaming`` block: end-to-end micro-batch
-latency (NDJSON file drop → metadata-stamped bronze commit) measured on
-the demo trigger preset against the reference's SLOs (BASELINE.md:
-p50 ≤ 20 s, p95 ≤ 60 s).
+Streaming latency is not measured here: ``perfbench/run.py --workload
+live`` reports the millisecond file-drop → bronze-commit latency.
 
 Output contract (r13): stdout carries the FULL result as the first
 line, then a COMPACT summary (same headline metric, slowest-20 query
@@ -36,112 +34,18 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 import sys
-import tempfile
-import threading
 import time
 from datetime import datetime, timezone
 
 import __spark_entry__ as entry_mod
 from scholar_stream_spark.session import get_spark
+from scholar_stream_spark.sources.tables import load_table
 
 
 def _sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
     return float(m.group(1)) if m else -1.0
-
-
-def measure_streaming_latency(
-    spark, run_seconds: float = 10.0, drop_interval: float = 0.8
-) -> dict:
-    """E2E latency: producer-stamped ``event_ts`` → commit-stamped
-    ``IngestionTime``, through the live ingest stream (demo trigger,
-    2 s micro-batches) — the Spark analog of the reference's
-    ``LANDED_TS - EVENT_TS`` SLO metric."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    from scholar_stream_spark.operators.views import build_vw_works  # noqa: PLC0415
-    from scholar_stream_spark.streaming.pipeline import start_ingest  # noqa: PLC0415
-
-    tmp = tempfile.mkdtemp(prefix="bench_stream_")
-    inbox = os.path.join(tmp, "inbox")
-    os.makedirs(inbox)
-    stop = threading.Event()
-    n_files = 0
-
-    def producer() -> None:
-        nonlocal n_files
-        while not stop.is_set():
-            now = datetime.now(timezone.utc).isoformat()
-            lines = "\n".join(
-                json.dumps(
-                    {"id": f"W{n_files}-{i}", "event_ts": now},
-                    separators=(",", ":"),
-                )
-                for i in range(50)
-            )
-            path = os.path.join(tmp, f"f{n_files}.ndjson")
-            with open(path, "w") as f:  # write outside, move in: atomic
-                f.write(lines + "\n")
-            shutil.move(path, os.path.join(inbox, f"f{n_files}.ndjson"))
-            n_files += 1
-            stop.wait(drop_interval)
-
-    writer = threading.Thread(target=producer, daemon=True)
-    writer.start()
-    q = start_ingest(
-        spark,
-        input_dir=inbox,
-        raw_path=os.path.join(tmp, "raw"),
-        checkpoint_path=os.path.join(tmp, "ckpt"),
-        trigger="demo",
-    )
-    time.sleep(run_seconds)
-    stop.set()
-    writer.join()
-    time.sleep(2.5)  # let the last micro-batch commit
-    q.stop()
-    q.awaitTermination(60)
-
-    # Guard the harness: a slow machine can commit nothing within
-    # run_seconds (missing raw path) or land only null-latency rows —
-    # either way report n_records=0/nulls instead of killing the bench
-    # after all query timings were collected.
-    empty = {
-        "e2e_p50_sec": None,
-        "e2e_p95_sec": None,
-        "n_records": 0,
-        "trigger": "demo (2s micro-batch)",
-        "slo": {"p50_max_sec": 20, "p95_max_sec": 60},
-    }
-    try:
-        landed = spark.read.parquet(os.path.join(tmp, "raw"))
-        vw = build_vw_works(landed.select("payload", "metadata"))
-        pcts = (
-            vw.filter(F.col("latency_seconds").isNotNull())
-            .agg(
-                F.expr(
-                    "percentile(latency_seconds, array(0.5, 0.95))"
-                ).alias("p"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .first()
-        )
-    except Exception as exc:  # noqa: BLE001 — empty stream, not a bug
-        print(f"  streaming block skipped: {exc}", file=sys.stderr)
-        return empty
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    if pcts is None or pcts["p"] is None or pcts["n"] == 0:
-        return empty
-    return {
-        "e2e_p50_sec": round(float(pcts["p"][0]), 2),
-        "e2e_p95_sec": round(float(pcts["p"][1]), 2),
-        "n_records": int(pcts["n"]),
-        "trigger": "demo (2s micro-batch)",
-        "slo": {"p50_max_sec": 20, "p95_max_sec": 60},
-    }
 
 
 def main() -> None:
@@ -210,12 +114,14 @@ def main() -> None:
         cross-round shifts in ITS timing measure ambient host drift
         (clock ramp, background load), letting shared-set deltas be
         attributed by measurement instead of narrative. Three reps per
-        pass so one scheduler hiccup doesn't poison the lane."""
+        pass so one scheduler hiccup doesn't poison the lane. Reads
+        through ``load_table`` like every query, so a rep pays no
+        schema-inference job once the session has seen the table."""
         out = []
         for _ in range(reps):
             t = time.time()
             (
-                spark.read.parquet(f"{sf_dir}/nation.parquet")
+                load_table(spark, sf_dir, "nation")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .write.format("noop")
                 .mode("overwrite")
@@ -270,9 +176,10 @@ def main() -> None:
     total = min(pass_walls)
 
     # Scale-profile lane: the dedup/similarity operators whose `scale`
-    # paths (hot-shingle cap, fast hashes, SemDeDup sub-split, star CC)
-    # are correctness-pinned but otherwise never timed. Best-of-2 per
-    # profile; failures degrade to an error entry, never kill the run.
+    # paths (fast hashes, hot-shingle doc-freq cap, SemDeDup cluster
+    # cap) are correctness-pinned but otherwise never timed. Best-of-2
+    # per profile; failures degrade to an error entry, never kill the
+    # run.
     scale_profile: dict[str, dict] = {}
     try:
         pairs = entry_mod.profile_pairs()
@@ -299,22 +206,6 @@ def main() -> None:
             scale_profile[name][prof] = best
         print(f"  profile {name}: {scale_profile[name]}", file=sys.stderr)
 
-    # The streaming probe must never cost the query timings already
-    # collected: any failure (stream won't start, host too slow, ...)
-    # degrades to the null-percentile block, not a crash.
-    try:
-        streaming = measure_streaming_latency(spark)
-    except Exception as exc:  # noqa: BLE001
-        streaming = {
-            "e2e_p50_sec": None,
-            "e2e_p95_sec": None,
-            "n_records": 0,
-            "trigger": "demo (2s micro-batch)",
-            "slo": {"p50_max_sec": 20, "p95_max_sec": 60},
-            "error": f"{type(exc).__name__}: {exc}"[:200],
-        }
-    print(f"  streaming e2e: {streaming}", file=sys.stderr)
-
     out = {
         "metric": "query_set_wall_clock",
         "value": total,
@@ -327,7 +218,6 @@ def main() -> None:
         # shared-set deltas against min-of-mins of this lane
         "calibration": calibration,
         "scale_profile": scale_profile,
-        "streaming": streaming,
         "started_at": started_at,  # run identifier: a stale file from a
         # previous round can't masquerade as this run's evidence
         "n_passes": n_passes,
@@ -350,7 +240,7 @@ def main() -> None:
     # the full line above (≈8 KB at 195 queries) parses as null there
     # (BENCH_r11/r12 both lost their head mid-object). The LAST stdout
     # line is therefore a compact summary sized to fit entirely inside
-    # that tail window: headline metric + pass walls + streaming SLO +
+    # that tail window: headline metric + pass walls + calibration +
     # the slowest queries, with a pointer to the full persisted JSON.
     slowest = dict(
         sorted(timings.items(), key=lambda kv: -kv[1])[:20]
@@ -368,10 +258,6 @@ def main() -> None:
         "calibration_min_sec": (
             min(min(c) for c in calibration) if calibration else None
         ),
-        "streaming": {
-            "e2e_p50_sec": streaming.get("e2e_p50_sec"),
-            "e2e_p95_sec": streaming.get("e2e_p95_sec"),
-        },
         "queries": slowest,
         "queries_truncated_to_slowest": 20,
         "full_results_file": os.path.basename(out_path),

@@ -374,9 +374,7 @@ def pretraining_pipeline(
 QUALITY_N_DECILES = 10
 
 
-def quality_deciles(
-    documents: DataFrame, profile: str = "oracle"
-) -> DataFrame:
+def quality_deciles(documents: DataFrame) -> DataFrame:
     """Per-source quality-score deciles — the calibration table that
     shows whether a single global quality threshold transfers across
     sources (it usually doesn't: the same cut that keeps 90% of one
@@ -396,14 +394,9 @@ def quality_deciles(
     here, sources are near-uniform), target ranks derived from the
     ≤|sources| count table exploded ×10 and broadcast back into a
     rank-equality join — the corpus is scanned once and shuffled once.
-
-    ``profile="oracle"`` (default) ranks with the per-source window —
-    one task sorts each source's whole slice (fine at source
-    cardinality ~uniform; the oracle-parity form).
-    ``profile="scale"`` is the skewed-corpus path made real: the SAME
-    integer ranks via ``relational.ranked_by_range`` (range shuffle +
-    per-partition offsets — a source's slice spans many parallel
-    tasks); pinned value-identical in pytest.
+    The per-source window is the one ranking form: the same ranks via
+    ``relational.ranked_by_range`` were 1.6× slower at sf0.1 (1.10 vs
+    1.77 s, ``BENCH_r18_baseline_local.json``).
 
     Output: (source, decile 1..10, score), source asc, decile asc.
     """
@@ -413,19 +406,10 @@ def quality_deciles(
         F.col("doc_id"),
         F.round(score, 4).alias("score"),
     )
-    if profile == "scale":
-        from scholar_stream_spark.operators.relational import (  # noqa: PLC0415 — avoids a module-load cycle; relational does not import curation
-            ranked_by_range,
-        )
-
-        ranked = ranked_by_range(
-            base, ["source"], ["score", "doc_id"]
-        ).select("source", "score", "rn")
-    else:
-        w = Window.partitionBy("source").orderBy("score", "doc_id")
-        ranked = base.select(
-            "source", "score", F.row_number().over(w).alias("rn")
-        )
+    w = Window.partitionBy("source").orderBy("score", "doc_id")
+    ranked = base.select(
+        "source", "score", F.row_number().over(w).alias("rn")
+    )
     targets = (
         base.groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))

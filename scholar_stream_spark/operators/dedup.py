@@ -2845,7 +2845,6 @@ def snm_candidate_pairs(
     part: DataFrame,
     window: int = SNM_WINDOW,
     max_dist: int = SNM_MAX_DIST,
-    profile: str = "oracle",
 ) -> DataFrame:
     """Sorted-neighborhood record-linkage candidates over part names —
     the blocking step of entity resolution (Hernández & Stolfo 1995):
@@ -2871,12 +2870,9 @@ def snm_candidate_pairs(
     EQUI-join — each spine row re-emits at ranks ``rank+1 ..
     rank+window`` via an exploded ``sequence`` and joins back on rank
     (w× row inflation, bounded by the constant window), NOT a band
-    join (no range/BNLJ anywhere; the plan audit stays green).
-    ``profile="oracle"`` ranks the spine on a single-total-order
-    window (bounded only by |distinct names|);  ``profile="scale"``
-    swaps to ``ranked_by_range`` — the form that holds when the
-    distinct-key spine itself is billions of rows — identical integer
-    ranks, pinned value-identical in pytest.
+    join (no range/BNLJ anywhere; the plan audit stays green). The
+    spine ranks on a single-total-order window over the distinct
+    names (see `_snm_ranked_spine`).
 
     Output: (name_a, name_b, lev, parts_a, parts_b) — lev INT, counts
     BIGINT. Row count ≤ |spine|·window, in practice the lev-gated
@@ -2889,9 +2885,9 @@ def snm_candidate_pairs(
     cost profile.
     """
     _snm_validate(window, max_dist)
-    return _snm_pairs(
-        _snm_ranked_spine(part, profile), window, max_dist
-    ).select("name_a", "name_b", "lev", "parts_a", "parts_b")
+    return _snm_pairs(_snm_ranked_spine(part), window, max_dist).select(
+        "name_a", "name_b", "lev", "parts_a", "parts_b"
+    )
 
 
 def _snm_validate(window: int, max_dist: int) -> None:
@@ -2906,7 +2902,7 @@ def _snm_validate(window: int, max_dist: int) -> None:
         )
 
 
-def _snm_ranked_spine(part: DataFrame, profile: str) -> DataFrame:
+def _snm_ranked_spine(part: DataFrame) -> DataFrame:
     """Distinct-name spine with per-name counts and the unique
     name-order rank — shared by `snm_candidate_pairs` (pairs) and
     `snm_entity_clusters` (the rank doubles as the integer node id
@@ -2914,17 +2910,12 @@ def _snm_ranked_spine(part: DataFrame, profile: str) -> DataFrame:
     spine = part.groupBy("p_name").agg(
         F.count(F.lit(1)).cast("long").alias("n_parts")
     )
-    if profile == "scale":
-        from scholar_stream_spark.operators.relational import (
-            ranked_by_range,
-        )
-
-        ranked = ranked_by_range(spine, [], ["p_name"], rank_col="rk")
-    else:
-        w = Window.orderBy("p_name")
-        ranked = spine.select(
-            "p_name", "n_parts", F.row_number().over(w).alias("rk")
-        )
+    # a global window over the distinct-name aggregate, not
+    # ranked_by_range: same ranks, 0.21 vs 0.57 s at sf0.1
+    w = Window.orderBy("p_name")
+    ranked = spine.select(
+        "p_name", "n_parts", F.row_number().over(w).alias("rk")
+    )
     # 2-3 consumers (pair join's two sides; the clusters' member
     # map-back) — checkpoint the spine-sized rank table so the
     # corpus groupBy(+rank) runs once, not per consumer
@@ -2967,7 +2958,6 @@ def snm_entity_clusters(
     part: DataFrame,
     window: int = SNM_WINDOW,
     max_dist: int = SNM_MAX_DIST,
-    profile: str = "oracle",
 ) -> DataFrame:
     """Entity-resolution clusters over the sorted-neighborhood match
     graph — the step after `snm_candidate_pairs` that turns pairwise
@@ -2982,18 +2972,17 @@ def snm_entity_clusters(
     Scale shape: the spine rank doubles as the integer node id, so
     the components come from the SHARED `hybrid_components` (driver
     union-find, or the large/small-star kernel above the cap — both
-    exact on the long-diameter chains SNM edit distance produces);
-    `profile` governs only the spine ranking. The edge list is
-    SNM-bounded (≤ |spine|·window before the lev gate); membership
-    maps back to names by ONE rank equi-join; the final rollup is
-    cluster-count sized.
+    exact on the long-diameter chains SNM edit distance produces).
+    The edge list is SNM-bounded (≤ |spine|·window before the lev
+    gate); membership maps back to names by ONE rank equi-join; the
+    final rollup is cluster-count sized.
     Singleton names (no match edge) are omitted — the pair list's
     contract, same as `neardup_clusters`.
 
     Output: (canonical_name, n_names, n_parts) — BIGINT counts;
     `n_names ≥ 2` by construction.
     """
-    members = _snm_members(part, window, max_dist, profile)
+    members = _snm_members(part, window, max_dist)
     return members.groupBy("lbl").agg(
         F.min("p_name").alias("canonical_name"),
         F.count(F.lit(1)).cast("long").alias("n_names"),
@@ -3001,15 +2990,13 @@ def snm_entity_clusters(
     ).select("canonical_name", "n_names", "n_parts")
 
 
-def _snm_members(
-    part: DataFrame, window: int, max_dist: int, profile: str
-) -> DataFrame:
+def _snm_members(part: DataFrame, window: int, max_dist: int) -> DataFrame:
     """Shared SNM cluster-member table: (node, lbl, p_name, n_parts)
     — one row per spine name that appears in ≥1 lev-gated pair, with
     its component label. Feeds `snm_entity_clusters` (per-cluster
     rollup) and `snm_survivor_map` (member → canonical mapping)."""
     _snm_validate(window, max_dist)
-    ranked = _snm_ranked_spine(part, profile)
+    ranked = _snm_ranked_spine(part)
     pairs = _snm_pairs(ranked, window, max_dist).select(
         F.col("rk_a").cast("long").alias("d1"),
         F.col("rk_b").cast("long").alias("d2"),
@@ -3033,7 +3020,6 @@ def snm_survivor_map(
     part: DataFrame,
     window: int = SNM_WINDOW,
     max_dist: int = SNM_MAX_DIST,
-    profile: str = "oracle",
 ) -> DataFrame:
     """Member → canonical replacement map for the SNM entity clusters —
     the lineage artifact `snm_entity_clusters` only summarizes: one row
@@ -3060,7 +3046,7 @@ def snm_survivor_map(
     context). Row count = Σ(cluster_size − 1) ≤ pair-graph node
     count.
     """
-    members = _snm_members(part, window, max_dist, profile).localCheckpoint(
+    members = _snm_members(part, window, max_dist).localCheckpoint(
         eager=False
     )
     canon = members.groupBy("lbl").agg(

@@ -2491,7 +2491,6 @@ def revenue_concentration(
     orders: DataFrame,
     customer: DataFrame,
     nation: DataFrame,
-    profile: str = "oracle",
 ) -> DataFrame:
     """Per-nation customer-decile revenue concentration — the Lorenz/
     Pareto table behind "the top 10% of customers carry X% of revenue"
@@ -2508,7 +2507,10 @@ def revenue_concentration(
     nation broadcasts into the customer slice; ranking runs per nation
     (a nation-keyed sort exchange over the AGGREGATE, never the fact
     table — ``quality_deciles``' justification); the decile rollup and
-    the share windows operate on ≤|nations|·10 rows.
+    the share windows operate on ≤|nations|·10 rows. The per-nation
+    ``Window`` is the one ranking form: ``ranked_by_range`` gave the
+    same ranks 2.3× slower at sf0.1 (0.59 vs 1.36 s,
+    ``BENCH_r18_baseline_local.json``).
 
     Engine parity: revenue sums are exact DECIMAL(18,2) arithmetic
     end-to-end (``exact_sum_double`` discipline) — ranking ties are
@@ -2526,34 +2528,20 @@ def revenue_concentration(
         F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
     ).select("c_custkey", "n_name")
     j = per_cust.join(cust_nat, per_cust.o_custkey == cust_nat.c_custkey)
-    if profile == "scale":
-        # the family's documented swap (``ranked_by_range``): per-nation
-        # ranking without any task holding a nation's full customer
-        # slice; DESC rev ranks as ASC on the exact-decimal negation
-        ranked = ranked_by_range(
-            j.select(
-                "n_name", "rev", (-F.col("rev")).alias("_neg"), "o_custkey"
-            ),
-            ["n_name"],
-            ["_neg", "o_custkey"],
-            rank_col="rk",
-            n_col="n_cust",
-        ).select("n_name", "rev", "rk", "n_cust")
-    else:
-        w_rank = Window.partitionBy("n_name").orderBy(
-            F.desc("rev"), F.asc("o_custkey")
-        )
-        # n_cust as a windowed count over the SAME n_name partitioning —
-        # a groupBy+broadcast-join here forks the plan and re-scans
-        # orders for the count subtree (measured: 2 fact scans, 9
-        # exchanges → 1 scan, 4 exchanges)
-        w_all = Window.partitionBy("n_name")
-        ranked = j.select(
-            "n_name",
-            "rev",
-            F.row_number().over(w_rank).alias("rk"),
-            F.count(F.lit(1)).over(w_all).alias("n_cust"),
-        )
+    w_rank = Window.partitionBy("n_name").orderBy(
+        F.desc("rev"), F.asc("o_custkey")
+    )
+    # n_cust as a windowed count over the SAME n_name partitioning —
+    # a groupBy+broadcast-join here forks the plan and re-scans
+    # orders for the count subtree (measured: 2 fact scans, 9
+    # exchanges → 1 scan, 4 exchanges)
+    w_all = Window.partitionBy("n_name")
+    ranked = j.select(
+        "n_name",
+        "rev",
+        F.row_number().over(w_rank).alias("rk"),
+        F.count(F.lit(1)).over(w_all).alias("n_cust"),
+    )
     dec = (
         ranked.withColumn(
             "decile",
@@ -2620,9 +2608,9 @@ def ranked_by_range(
     rank_col: str = "rn",
     n_col: str | None = None,
 ) -> DataFrame:
-    """Distributed rank-exact ``row_number`` — the scale path the
-    rank-exact family's docstrings promise (``quality_deciles`` /
-    ``rfm_segments`` / ``mad_outliers``): a per-key total-order window
+    """Distributed rank-exact ``row_number`` — the ranking of
+    ``rfm_segments``, ``segment_migration``, ``vocab_growth`` and
+    ``zipf_fit``, whose inputs are not grid-sized: a per-key total-order window
     sorts each key's WHOLE slice in one task (5 event types / 25
     nations / one global order ⇒ single-task sorts at 10⁹ rows); this
     helper computes the IDENTICAL integer ranks with
@@ -2780,9 +2768,7 @@ def ranked_by_range(
 MAD_K = 3.0
 
 
-def mad_outliers(
-    events: DataFrame, k: float = MAD_K, profile: str = "oracle"
-) -> DataFrame:
+def mad_outliers(events: DataFrame, k: float = MAD_K) -> DataFrame:
     """Median/MAD robust outlier screen per event type — the companion
     to ``detect_outliers``' z-score: mean/stddev are themselves dragged
     by the outliers they're hunting (one 1000x value inflates sigma
@@ -2805,12 +2791,8 @@ def mad_outliers(
     ≤|types|-row (median, MAD) tables broadcast back into stateless
     filters. Output is alert-sized (outliers only).
 
-    ``profile="oracle"`` (default) ranks with per-type total-order
-    windows — one task sorts each type's whole slice (5 types here;
-    the oracle-parity form). ``profile="scale"`` computes the SAME
-    integer ranks with ``ranked_by_range`` (range shuffle +
-    per-partition offsets — n_parts-way parallel per pass, no
-    single-task key slices); pinned value-identical in pytest.
+    Both passes rank with per-type total-order windows: the same ranks
+    via ``ranked_by_range`` were 2.2× slower at sf0.1 (1.00 vs 2.23 s).
 
     Output: (event_id, event_type, value, med, mad, abs_dev).
     """
@@ -2819,43 +2801,26 @@ def mad_outliers(
         .localCheckpoint(eager=False)
     )
     w_n = Window.partitionBy("event_type")
-    if profile == "scale":
-        ranked = ranked_by_range(
-            base, ["event_type"], ["value", "event_id"], n_col="n"
-        )
-    else:
-        w_val = Window.partitionBy("event_type").orderBy(
-            "value", "event_id"
-        )
-        ranked = base.select(
-            "event_type",
-            "value",
-            F.row_number().over(w_val).alias("rn"),
-            F.count(F.lit(1)).over(w_n).alias("n"),
-        )
+    w_val = Window.partitionBy("event_type").orderBy("value", "event_id")
+    ranked = base.select(
+        "event_type",
+        "value",
+        F.row_number().over(w_val).alias("rn"),
+        F.count(F.lit(1)).over(w_n).alias("n"),
+    )
     med_tbl = ranked.filter(
         F.col("rn") == F.expr("(n + 1) DIV 2")
     ).select("event_type", F.col("value").alias("med"))
     devs = base.join(F.broadcast(med_tbl), "event_type").withColumn(
         "abs_dev", F.abs(F.col("value") - F.col("med"))
     )
-    if profile == "scale":
-        dev_ranked = ranked_by_range(
-            devs.select("event_type", "abs_dev", "event_id"),
-            ["event_type"],
-            ["abs_dev", "event_id"],
-            n_col="n",
-        )
-    else:
-        w_dev = Window.partitionBy("event_type").orderBy(
-            "abs_dev", "event_id"
-        )
-        dev_ranked = devs.select(
-            "event_type",
-            "abs_dev",
-            F.row_number().over(w_dev).alias("rn"),
-            F.count(F.lit(1)).over(w_n).alias("n"),
-        )
+    w_dev = Window.partitionBy("event_type").orderBy("abs_dev", "event_id")
+    dev_ranked = devs.select(
+        "event_type",
+        "abs_dev",
+        F.row_number().over(w_dev).alias("rn"),
+        F.count(F.lit(1)).over(w_n).alias("n"),
+    )
     mad_tbl = dev_ranked.filter(
         F.col("rn") == F.expr("(n + 1) DIV 2")
     ).select("event_type", F.col("abs_dev").alias("mad"))
@@ -2873,9 +2838,7 @@ def mad_outliers(
     )
 
 
-def window_rank_suite(
-    events: DataFrame, n_tiles: int = 4, profile: str = "oracle"
-) -> DataFrame:
+def window_rank_suite(events: DataFrame, n_tiles: int = 4) -> DataFrame:
     """The full analytic ranking-function family in one table — rank,
     dense_rank, percent_rank, cume_dist, ntile — per event over its
     type's value order. Individually trivial; together they are the
@@ -2894,83 +2857,13 @@ def window_rank_suite(
     One type-keyed sort exchange serves both window specs (same
     partitioning, same leading sort key).
 
-    ``profile="scale"`` derives the whole family from ONE
-    ``ranked_by_range`` pass (the rank-exact scale discipline — no
-    single-task per-type window sort): with ``rn`` the (value,
-    event_id) total-order row number and ``n`` the type size,
-    rank = min(rn) over the (type, value) tie group, cume's
-    n_peers_leq = max(rn) over the same group, dense_rank = the tie
-    group's index (a second tiny ranked pass over DISTINCT (type,
-    value)), ntile = the textbook row-based formula on rn directly.
-    The tie-group aggregates shuffle on (type, value) — far more keys
-    than types, no giant slices. Pinned value-identical in pytest.
+    The family is Spark's own window functions: re-deriving it from
+    ``ranked_by_range`` row numbers gave the same values 4.2× slower at
+    sf0.1 (0.47 vs 1.98 s).
 
     Output: (event_id, event_type, value, rnk, dense_rnk, pct_rank,
     cume, tile).
     """
-    if profile == "scale":
-        base = ranked_by_range(
-            events.select("event_id", "event_type", "value"),
-            ["event_type"],
-            ["value", "event_id"],
-            n_col="n",
-        )
-        w_tie = Window.partitionBy("event_type", "value")
-        staged = base.select(
-            "event_id",
-            "event_type",
-            "value",
-            "rn",
-            "n",
-            F.min("rn").over(w_tie).alias("rnk_raw"),
-            F.max("rn").over(w_tie).alias("n_leq"),
-        )
-        dense = ranked_by_range(
-            events.select("event_type", "value").distinct(),
-            ["event_type"],
-            ["value"],
-            rank_col="dense_rnk",
-        )
-        # ntile, row-based: tile = ((rn-1)·t + t-1) DIV n + 1 is NOT the
-        # SQL rule; SQL gives the first n % t tiles one extra row:
-        # tile = (rn-1) DIV (n DIV t + 1) + 1 for the big tiles, else
-        # offset into the small ones — expressed branch-free below
-        t = int(n_tiles)
-        big = F.expr(f"n DIV {t} + 1")  # big-tile size
-        n_big = F.expr(f"n % {t}")      # how many big tiles
-        cut = big * n_big               # rows covered by big tiles
-        tile = F.when(
-            F.col("rn") <= cut,
-            (F.col("rn") - 1) / big,
-        ).otherwise(
-            n_big + (F.col("rn") - cut - 1) / F.expr(f"n DIV {t}")
-        )
-        return (
-            staged.join(dense, ["event_type", "value"])
-            .select(
-                "event_id",
-                "event_type",
-                "value",
-                F.col("rnk_raw").alias("rnk"),
-                F.col("dense_rnk"),
-                # SQL percent_rank of a single-row partition is 0.0,
-                # not 0/0
-                F.when(F.col("n") == 1, F.lit(0.0))
-                .otherwise(
-                    F.round(
-                        (F.col("rnk_raw") - 1).cast("double")
-                        / (F.col("n") - 1).cast("double"),
-                        6,
-                    )
-                )
-                .alias("pct_rank"),
-                F.round(
-                    F.col("n_leq").cast("double") / F.col("n").cast("double"),
-                    6,
-                ).alias("cume"),
-                (F.floor(tile) + 1).cast("long").alias("tile"),
-            )
-        )
     w_val = Window.partitionBy("event_type").orderBy("value")
     w_total = Window.partitionBy("event_type").orderBy(
         "value", "event_id"
@@ -3069,7 +2962,7 @@ def corr_matrix(lineitem: DataFrame, cols: tuple = CORR_COLS) -> DataFrame:
     )
 
 
-def rfm_segments(orders: DataFrame, profile: str = "oracle") -> DataFrame:
+def rfm_segments(orders: DataFrame) -> DataFrame:
     """RFM customer segmentation — recency (days since the customer's
     last order, against the dataset's max order date as "now"),
     frequency (order count), monetary (exact-decimal revenue) — each
@@ -3088,15 +2981,10 @@ def rfm_segments(orders: DataFrame, profile: str = "oracle") -> DataFrame:
 
     Scale shape: the fact table collapses to a ≤|customers|-row
     3-metric aggregate FIRST (one map-side-combined exchange — the
-    only fact-sized cost); the three ranking windows then run over
-    that aggregate. ``profile="oracle"`` (default) writes them as
-    single-total-order windows for oracle parity — one task sorts all
-    customers, three times. ``profile="scale"`` is the documented
-    mechanical swap made real: each metric ranks via
-    ``ranked_by_range`` (range shuffle + per-partition offsets,
-    n_parts-way parallel — the form that holds at 10⁹ customers), the
-    integer rank arithmetic unchanged, and the three score tables
-    hash-join back on custkey; pinned value-identical in pytest.
+    only fact-sized cost); the three rankings then run over that
+    aggregate with ``ranked_by_range`` (range shuffle + per-partition
+    offsets), because a global ``Window`` would sort every customer
+    in one task.
 
     Output: (r_score, f_score, m_score, n_customers, total_revenue),
     scores descending-best.
@@ -3121,75 +3009,51 @@ def rfm_segments(orders: DataFrame, profile: str = "oracle") -> DataFrame:
             "monetary",
         )
     )
-    if profile == "scale":
-        # three independent total orders -> ONE metric-tagged range-rank
-        # pass (r17 opt): each metric's rows ride the union under a tag
-        # key, ranked_by_range ranks WITHIN the tag (its key_cols
-        # machinery), and one per-customer rollup pivots the three
-        # scores back — 1 range Exchange + 1 offsets collect instead of
-        # 3+3, and the three custkey hash joins collapse into the
-        # rollup. Descending metrics rank on the NEGATED column; every
-        # sort key is exact (long / DECIMAL widened losslessly to
-        # DECIMAL(38,2)), so per-metric order — and therefore every
-        # integer rank — is bit-identical to the three-pass form
-        # (pinned value-identical in pytest).
-        per_cust = per_cust.localCheckpoint(eager=False)
-        k38 = "decimal(38,2)"
-        tagged = None
-        for mid, (metric_col, asc) in enumerate(
-            [("recency_days", True), ("frequency", False), ("monetary", False)]
-        ):
-            key = F.col(metric_col) if asc else -F.col(metric_col)
-            sel = per_cust.select(
-                F.lit(mid).alias("_m"),
-                "o_custkey",
-                key.cast(k38).alias("_k"),
-                # monetary rides its own metric's rows so the rollup
-                # needs NO join back to per_cust
-                (
-                    F.col("monetary")
-                    if metric_col == "monetary"
-                    else F.lit(None).cast("decimal(18,2)")
-                ).alias("_money"),
-            )
-            tagged = sel if tagged is None else tagged.unionByName(sel)
-        ranked = ranked_by_range(
-            tagged, ["_m"], ["_k", "o_custkey"], rank_col="rk", n_col="n"
+    # three independent total orders -> ONE metric-tagged range-rank
+    # pass (r17 opt): each metric's rows ride the union under a tag
+    # key, ranked_by_range ranks WITHIN the tag (its key_cols
+    # machinery), and one per-customer rollup pivots the three
+    # scores back — 1 range Exchange + 1 offsets collect instead of
+    # 3+3, and the three custkey hash joins collapse into the
+    # rollup. Descending metrics rank on the NEGATED column; every
+    # sort key is exact (long / DECIMAL widened losslessly to
+    # DECIMAL(38,2)), so per-metric order — and therefore every
+    # integer rank — is that of the metric alone.
+    per_cust = per_cust.localCheckpoint(eager=False)
+    k38 = "decimal(38,2)"
+    tagged = None
+    for mid, (metric_col, asc) in enumerate(
+        [("recency_days", True), ("frequency", False), ("monetary", False)]
+    ):
+        key = F.col(metric_col) if asc else -F.col(metric_col)
+        sel = per_cust.select(
+            F.lit(mid).alias("_m"),
+            "o_custkey",
+            key.cast(k38).alias("_k"),
+            # monetary rides its own metric's rows so the rollup
+            # needs NO join back to per_cust
+            (
+                F.col("monetary")
+                if metric_col == "monetary"
+                else F.lit(None).cast("decimal(18,2)")
+            ).alias("_money"),
         )
-        score = F.expr("CAST(5 - ((rk - 1) * 5) DIV n AS INT)")
+        tagged = sel if tagged is None else tagged.unionByName(sel)
+    ranked = ranked_by_range(
+        tagged, ["_m"], ["_k", "o_custkey"], rank_col="rk", n_col="n"
+    )
+    score = F.expr("CAST(5 - ((rk - 1) * 5) DIV n AS INT)")
 
-        def _pick(mid: int, name: str):
-            return F.max(F.when(F.col("_m") == mid, score)).alias(name)
+    def _pick(mid: int, name: str):
+        return F.max(F.when(F.col("_m") == mid, score)).alias(name)
 
-        scored = ranked.groupBy("o_custkey").agg(
-            _pick(0, "r_score"),
-            _pick(1, "f_score"),
-            _pick(2, "m_score"),
-            F.max(F.when(F.col("_m") == 2, F.col("_money"))).alias(
-                "monetary"
-            ),
-        )
-        return scored.groupBy("r_score", "f_score", "m_score").agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.expr("CAST(SUM(monetary) AS DOUBLE)").alias("total_revenue"),
-        )
-    n_w = Window.partitionBy()
-    w_r = Window.orderBy(F.asc("recency_days"), F.asc("o_custkey"))
-    w_f = Window.orderBy(F.desc("frequency"), F.asc("o_custkey"))
-    w_m = Window.orderBy(F.desc("monetary"), F.asc("o_custkey"))
-    scored = per_cust.select(
-        "o_custkey",
-        "monetary",
-        F.row_number().over(w_r).alias("rk_r"),
-        F.row_number().over(w_f).alias("rk_f"),
-        F.row_number().over(w_m).alias("rk_m"),
-        F.count(F.lit(1)).over(n_w).alias("n"),
-    ).select(
-        "o_custkey",
-        "monetary",
-        F.expr("CAST(5 - ((rk_r - 1) * 5) DIV n AS INT)").alias("r_score"),
-        F.expr("CAST(5 - ((rk_f - 1) * 5) DIV n AS INT)").alias("f_score"),
-        F.expr("CAST(5 - ((rk_m - 1) * 5) DIV n AS INT)").alias("m_score"),
+    scored = ranked.groupBy("o_custkey").agg(
+        _pick(0, "r_score"),
+        _pick(1, "f_score"),
+        _pick(2, "m_score"),
+        F.max(F.when(F.col("_m") == 2, F.col("_money"))).alias(
+            "monetary"
+        ),
     )
     return scored.groupBy("r_score", "f_score", "m_score").agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
@@ -3414,7 +3278,7 @@ def customer_order_gaps(orders: DataFrame) -> DataFrame:
 
 
 def shipping_delay_profile(
-    orders: DataFrame, lineitem: DataFrame, profile: str = "oracle"
+    orders: DataFrame, lineitem: DataFrame
 ) -> DataFrame:
     """Order→ship latency profile per order priority: rank-exact
     median and p90 of ``datediff(l_shipdate, o_orderdate)`` plus the
@@ -3434,16 +3298,9 @@ def shipping_delay_profile(
     the ``max_lag_days`` aggregate; the ``mad_outliers`` pin-once
     discipline, or the fact join runs twice). Lags then rank inside a
     priority-keyed window exchange, the two target ranks select via the
-    same broadcast pattern; output is ≤|priorities| rows.
-
-    ``profile="oracle"`` (default) ranks with the per-priority
-    total-order window — one task sorts each priority's whole slice (5
-    priorities ⇒ 5 tasks regardless of cluster size; the oracle-parity
-    form). ``profile="scale"`` computes the SAME integer ranks with
-    ``ranked_by_range`` (range shuffle + per-partition offsets —
-    n_parts-way parallel, no single-task key slices); pinned
-    value-identical in pytest, timed in bench's ``scale_profile`` lane
-    like the rest of the rank-exact family.
+    same broadcast pattern; output is ≤|priorities| rows. The window
+    is the one ranking form: ``ranked_by_range`` gave the same ranks
+    2× slower at sf0.1 (1.23 vs 2.44 s, ``BENCH_r18_baseline_local.json``).
 
     Output: (o_orderpriority, n_lineitems, median_lag_days,
     p90_lag_days, max_lag_days).
@@ -3464,25 +3321,16 @@ def shipping_delay_profile(
         )
         .localCheckpoint(eager=False)
     )
-    if profile == "scale":
-        ranked = ranked_by_range(
-            lags,
-            ["o_orderpriority"],
-            ["lag_days", "l_orderkey", "l_linenumber"],
-            rank_col="rn",
-            n_col="n",
-        ).select("o_orderpriority", "lag_days", "rn", "n")
-    else:
-        w = Window.partitionBy("o_orderpriority").orderBy(
-            "lag_days", "l_orderkey", "l_linenumber"
-        )
-        w_n = Window.partitionBy("o_orderpriority")
-        ranked = lags.select(
-            "o_orderpriority",
-            "lag_days",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1)).over(w_n).alias("n"),
-        )
+    w = Window.partitionBy("o_orderpriority").orderBy(
+        "lag_days", "l_orderkey", "l_linenumber"
+    )
+    w_n = Window.partitionBy("o_orderpriority")
+    ranked = lags.select(
+        "o_orderpriority",
+        "lag_days",
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(w_n).alias("n"),
+    )
     picks = ranked.filter(
         (F.col("rn") == F.expr("(n + 1) DIV 2"))
         | (F.col("rn") == F.expr("(9 * n + 9) DIV 10"))
@@ -3716,9 +3564,7 @@ def prefix_sum_by_range(
     return base.mapInPandas(kernel, ", ".join(out_fields))
 
 
-def pareto_parts(
-    lineitem: DataFrame, profile: str = "oracle"
-) -> DataFrame:
+def pareto_parts(lineitem: DataFrame) -> DataFrame:
     """ABC inventory classification — the Pareto rollup behind "which
     parts carry the revenue?": parts rank by revenue descending, class
     A = parts up to 70% of cumulative revenue, B to 90%, C the tail
@@ -3742,14 +3588,11 @@ def pareto_parts(
 
     Scale shape: the fact table collapses to the ≤|parts|-row revenue
     rollup first (one map-side-combined exchange — the only fact-sized
-    move); the cumulative window then runs over the DIMENSION-sized
-    aggregate (the ``revenue_concentration`` precedent).
-    ``profile="oracle"`` (default) uses the single-task global window
-    (oracle-parity form); ``profile="scale"`` computes the IDENTICAL
-    exact-decimal cumulative sums with ``prefix_sum_by_range``
-    (``ranked_by_range``'s machinery with per-partition partial SUMS —
-    n_parts-way parallel, no single task holds the full part order);
-    pinned value-identical in pytest. Output: 3 rows.
+    move); the exact-decimal cumulative sum over that DIMENSION-sized
+    aggregate runs with ``prefix_sum_by_range`` (``ranked_by_range``'s
+    machinery with per-partition partial SUMS), because a global
+    ``Window`` would hold the full part order in one task. Output: 3
+    rows.
 
     Output: (abc_class, n_parts, revenue, revenue_share round-6).
     """
@@ -3759,29 +3602,17 @@ def pareto_parts(
         ).alias("rev")
     )
     a_bound, b_bound = ABC_BOUNDS
-    if profile == "scale":
-        cumed = prefix_sum_by_range(
-            per_part,
-            [F.desc("rev"), F.asc("l_partkey")],
-            "rev",
-            cum_col="cum",
-            total_col="total",
-        ).select(
-            "rev",
-            F.col("cum").cast("decimal(25,4)").alias("cum"),
-            F.col("total").cast("decimal(25,4)").alias("total"),
-        )
-    else:
-        w_cum = (
-            Window.orderBy(F.desc("rev"), F.asc("l_partkey"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        w_tot = Window.partitionBy()
-        cumed = per_part.select(
-            "rev",
-            F.sum("rev").over(w_cum).cast("decimal(25,4)").alias("cum"),
-            F.sum("rev").over(w_tot).cast("decimal(25,4)").alias("total"),
-        )
+    cumed = prefix_sum_by_range(
+        per_part,
+        [F.desc("rev"), F.asc("l_partkey")],
+        "rev",
+        cum_col="cum",
+        total_col="total",
+    ).select(
+        "rev",
+        F.col("cum").cast("decimal(25,4)").alias("cum"),
+        F.col("total").cast("decimal(25,4)").alias("total"),
+    )
     classed = cumed.select(
         "rev",
         "total",
@@ -3950,7 +3781,6 @@ MIGRATION_SPLIT_DATE = "1995-01-01"
 def segment_migration(
     orders: DataFrame,
     split_date: str = MIGRATION_SPLIT_DATE,
-    profile: str = "oracle",
 ) -> DataFrame:
     """Customer value-tier migration matrix — which revenue quintile
     each customer moved to between two periods (the CRM flow table
@@ -3970,13 +3800,10 @@ def segment_migration(
     Scale shape: the fact table collapses to ONE ≤|customers|-row
     two-period conditional aggregate (one map-side-combined exchange —
     the only fact-sized cost); the per-period rankings run over
-    present-customer slices of that aggregate. ``profile="oracle"``
-    ranks on single-total-order windows (oracle parity; bounded input
-    — the per-customer rollup). ``profile="scale"`` swaps both
-    rankings to ``ranked_by_range`` (range shuffle + per-partition
-    offsets, n_parts-parallel — the form that holds at 10⁹ customers),
-    identical integer arithmetic, hash-joined back on custkey; pinned
-    value-identical in pytest. Final matrix is a ≤36-cell aggregate.
+    present-customer slices of that aggregate with ``ranked_by_range``
+    (range shuffle + per-partition offsets), because a global
+    ``Window`` would sort every customer in one task. Final matrix is
+    a ≤36-cell aggregate.
 
     Output: (p1_tier, p2_tier, n_customers, revenue_p2) — tiers INT
     (0 = absent), revenue_p2 the cell's exact DECIMAL(18,2) period-2
@@ -3996,79 +3823,45 @@ def segment_migration(
         ).alias("rev2"),
     )
 
-    def _tier_oracle(rev_col: str, name: str) -> DataFrame:
-        present = per_cust.filter(F.col(rev_col).isNotNull())
-        w = Window.orderBy(F.desc(rev_col), F.asc("o_custkey"))
-        return present.select(
+    # both period rankings in ONE period-tagged range-rank pass
+    # (the fused rfm_segments shape): present-in-period slices union
+    # under a tag, ranked_by_range ranks within the tag, and the
+    # per-customer rollup pivots the two tiers back — 1 range
+    # Exchange + 1 offsets collect instead of 2+2, no custkey joins.
+    # A customer present in ONE period simply has no row under the
+    # other tag -> NULL tier -> coalesced to tier 0. rev2 rides the
+    # period-2 rows (absent-in-p2 => NULL). Every customer has >= 1
+    # order so the union covers per_cust exactly.
+    per_cust = per_cust.localCheckpoint(eager=False)
+    tagged = None
+    for mid, rev_col in enumerate(["rev1", "rev2"], start=1):
+        sel = per_cust.filter(F.col(rev_col).isNotNull()).select(
+            F.lit(mid).alias("_m"),
             "o_custkey",
-            F.row_number().over(w).alias("rk"),
-            F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
-        ).select(
-            "o_custkey",
-            F.expr("CAST(5 - ((rk - 1) * 5) DIV n AS INT)").alias(name),
+            (-F.col(rev_col)).alias("_k"),
+            (
+                F.col("rev2")
+                if rev_col == "rev2"
+                else F.lit(None).cast("decimal(18,2)")
+            ).alias("_rev2"),
         )
-
-    if profile == "scale":
-        # both period rankings in ONE period-tagged range-rank pass
-        # (the fused rfm_segments shape, r17 opt): present-in-period
-        # slices union under a tag, ranked_by_range ranks within the
-        # tag, and the per-customer rollup pivots the two tiers back —
-        # 1 range Exchange + 1 offsets collect instead of 2+2, no
-        # custkey joins. A customer present in ONE period simply has
-        # no row under the other tag -> NULL tier -> the same
-        # coalesce-to-0 the LEFT joins produced. rev2 rides the
-        # period-2 rows (absent-in-p2 => NULL, as before). Every
-        # customer has >= 1 order so the union covers per_cust
-        # exactly; per-period order keys are unchanged, so every
-        # integer rank is bit-identical (pinned in pytest).
-        per_cust = per_cust.localCheckpoint(eager=False)
-        tagged = None
-        for mid, rev_col in enumerate(["rev1", "rev2"], start=1):
-            sel = per_cust.filter(F.col(rev_col).isNotNull()).select(
-                F.lit(mid).alias("_m"),
-                "o_custkey",
-                (-F.col(rev_col)).alias("_k"),
-                (
-                    F.col("rev2")
-                    if rev_col == "rev2"
-                    else F.lit(None).cast("decimal(18,2)")
-                ).alias("_rev2"),
-            )
-            tagged = sel if tagged is None else tagged.unionByName(sel)
-        ranked = ranked_by_range(
-            tagged, ["_m"], ["_k", "o_custkey"], rank_col="rk", n_col="n"
+        tagged = sel if tagged is None else tagged.unionByName(sel)
+    ranked = ranked_by_range(
+        tagged, ["_m"], ["_k", "o_custkey"], rank_col="rk", n_col="n"
+    )
+    tier_expr = F.expr("CAST(5 - ((rk - 1) * 5) DIV n AS INT)")
+    joined = ranked.groupBy("o_custkey").agg(
+        F.coalesce(
+            F.max(F.when(F.col("_m") == 1, tier_expr)), F.lit(0)
         )
-        tier_expr = F.expr("CAST(5 - ((rk - 1) * 5) DIV n AS INT)")
-        joined = ranked.groupBy("o_custkey").agg(
-            F.coalesce(
-                F.max(F.when(F.col("_m") == 1, tier_expr)), F.lit(0)
-            )
-            .cast("int")
-            .alias("p1_tier"),
-            F.coalesce(
-                F.max(F.when(F.col("_m") == 2, tier_expr)), F.lit(0)
-            )
-            .cast("int")
-            .alias("p2_tier"),
-            F.max(F.when(F.col("_m") == 2, F.col("_rev2"))).alias("rev2"),
+        .cast("int")
+        .alias("p1_tier"),
+        F.coalesce(
+            F.max(F.when(F.col("_m") == 2, tier_expr)), F.lit(0)
         )
-        return joined.groupBy("p1_tier", "p2_tier").agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.expr(
-                "CAST(COALESCE(SUM(rev2), CAST(0 AS DECIMAL(18,2))) "
-                "AS DOUBLE)"
-            ).alias("revenue_p2"),
-        )
-
-    tier = _tier_oracle
-    joined = (
-        per_cust.join(tier("rev1", "_t1"), "o_custkey", "left")
-        .join(tier("rev2", "_t2"), "o_custkey", "left")
-        .select(
-            F.coalesce(F.col("_t1"), F.lit(0)).cast("int").alias("p1_tier"),
-            F.coalesce(F.col("_t2"), F.lit(0)).cast("int").alias("p2_tier"),
-            "rev2",
-        )
+        .cast("int")
+        .alias("p2_tier"),
+        F.max(F.when(F.col("_m") == 2, F.col("_rev2"))).alias("rev2"),
     )
     return joined.groupBy("p1_tier", "p2_tier").agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),

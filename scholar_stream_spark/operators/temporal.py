@@ -366,7 +366,7 @@ def session_type_lift(
 
 
 def _sweep_levels_by_range(net: DataFrame, n_parts: int | None = None):
-    """Fused scale-profile sweep (r17, §2.4): from the NET change-point
+    """Distributed sweep for `session_concurrency`: from the NET change-point
     table ``(t, _net)`` emit ``(t, _lvl, _next_t)`` — running level and
     lead — in ONE range shuffle + one Arrow pass. The offsets collect
     (``prefix_sum_by_range``'s discipline: DECIMAL(38) partition sums
@@ -473,7 +473,6 @@ def _sweep_levels_by_range(net: DataFrame, n_parts: int | None = None):
 def session_concurrency(
     events: DataFrame,
     gap_seconds: int = SESSION_GAP_SECONDS,
-    profile: str = "oracle",
 ) -> DataFrame:
     """Concurrency profile over the sessionized event stream — how much
     wall-clock time the system spends with exactly c sessions open (the
@@ -493,24 +492,19 @@ def session_concurrency(
     order unique on the timestamp alone — no endpoint-kind tiebreaks.
     Level-0 rows are real output (idle gaps between sessions); the
     final change point closes the last session back to level 0 and
-    has no interval (nothing after it), so it is dropped by the
-    rank+1 join / lead, both engines.
+    has no interval (nothing after it), so it is dropped (the oracle's
+    lead is NULL there too).
 
     Scale shape: sessionize's two user-keyed exchanges, then the
-    change-point table is SESSION-sized (≤ 2 per session), where
-    ``profile="oracle"`` runs one single-task window (cumsum + lead)
-    and ``profile="scale"`` swaps in `prefix_sum_by_range` (exact
-    int64 cumsum, n_parts-way) + `ranked_by_range` with a rank+1
-    equi-join for the lead — the pair that holds when the change-point
-    table itself is billions of rows; value-identical, pinned. Output
-    rollup is ≤ max-concurrency rows.
+    change-point table is SESSION-sized (≤ 2 per session). Level and
+    lead come from `_sweep_levels_by_range` (one range shuffle + one
+    Arrow pass), because a global ``Window`` over that table would run
+    in one task. Output rollup is ≤ max-concurrency rows.
 
     Output: (concurrency, n_intervals, total_us) — all BIGINT exact;
     ``sum(total_us)`` spans first change point → last change point by
     construction.
     """
-    if profile not in ("oracle", "scale"):
-        raise ValueError(f"session_concurrency: unknown profile {profile!r}")
     if gap_seconds <= 0:
         raise ValueError(
             f"session_concurrency: gap_seconds must be > 0, got "
@@ -531,22 +525,8 @@ def session_concurrency(
         sess.select(F.col("_e").alias("t"), F.lit(-1).alias("d"))
     )
     net = pts.groupBy("t").agg(F.sum("d").cast("long").alias("_net"))
-    if profile == "scale":
-        # fused sweep: one range shuffle + one Arrow pass for level AND
-        # lead (was prefix_sum_by_range + ranked_by_range + a rank+1
-        # self-join — 3 shuffles); value-identical, pinned
-        iv = _sweep_levels_by_range(net).filter(
-            F.col("_next_t").isNotNull()
-        )
-    else:
-        w = Window.orderBy("t")
-        iv = net.select(
-            "t",
-            F.sum("_net")
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("_lvl"),
-            F.lead("t").over(w).alias("_next_t"),
-        ).filter(F.col("_next_t").isNotNull())
+    # one range shuffle + one Arrow pass for level AND lead
+    iv = _sweep_levels_by_range(net).filter(F.col("_next_t").isNotNull())
     return (
         iv.groupBy(F.col("_lvl").cast("long").alias("concurrency"))
         .agg(

@@ -20,6 +20,7 @@ from scholar_stream_spark.plans.hybrid import driver_rows_df
 from scholar_stream_spark.plans.partitioning import scale_out
 from scholar_stream_spark.functions.hashing import hex48_spark_sql
 from scholar_stream_spark.functions.text import normalize_text
+from scholar_stream_spark.operators.relational import ranked_by_range
 
 #: Stopword list used for quality scoring (drawn from the corpus vocab).
 STOPWORDS = ("the", "a")
@@ -2393,7 +2394,6 @@ VOCAB_GROWTH_BUCKETS = 10
 def vocab_growth(
     documents: DataFrame,
     n_buckets: int = VOCAB_GROWTH_BUCKETS,
-    profile: str = "oracle",
 ) -> DataFrame:
     """Heaps'-law vocabulary-growth curve — how many NEW types each
     corpus decile contributes (reference behavior: the scholar-stream
@@ -2418,10 +2418,9 @@ def vocab_growth(
     mins and occurrence sums both read it, so the explode runs once,
     not per consumer). Cumulative sums run on the ≤``n_buckets``-row grid
     (single-task Window over an aggregate — plan-audit bounded).
-    ``profile="oracle"`` ranks docs on a single-total-order window;
-    ``profile="scale"`` swaps to ``ranked_by_range`` (range shuffle +
-    per-partition offsets — the form that holds at 10⁹ docs),
-    identical integer arithmetic, pinned value-identical in pytest.
+    Docs rank with ``ranked_by_range`` (range shuffle + per-partition
+    offsets), because a global ``Window`` over the bare corpus scan
+    would sort every document in one task.
 
     Output: (bucket, n_docs, new_types, cum_types, bucket_grams,
     cum_grams, type_token_ratio) — counts BIGINT exact, ttr one IEEE
@@ -2432,21 +2431,7 @@ def vocab_growth(
             f"vocab_growth: n_buckets must be >= 1, got {n_buckets}"
         )
     base = documents.select("doc_id", "text")
-    if profile == "scale":
-        from scholar_stream_spark.operators.relational import (
-            ranked_by_range,
-        )
-
-        ranked = ranked_by_range(
-            base, [], ["doc_id"], rank_col="_r", n_col="_n"
-        )
-    else:
-        w = Window.orderBy("doc_id")
-        ranked = base.select(
-            "text",
-            F.row_number().over(w).alias("_r"),
-            F.count(F.lit(1)).over(Window.partitionBy()).alias("_n"),
-        )
+    ranked = ranked_by_range(base, [], ["doc_id"], rank_col="_r", n_col="_n")
     bucketed = ranked.select(
         F.expr(
             f"CAST((CAST(_r AS BIGINT) - 1) * {n_buckets} "
@@ -2726,10 +2711,7 @@ def char_entropy(documents: DataFrame) -> DataFrame:
     )
 
 
-def zipf_fit(
-    documents: DataFrame,
-    profile: str = "oracle",
-) -> DataFrame:
+def zipf_fit(documents: DataFrame) -> DataFrame:
     """Zipf rank-frequency fit — the corpus-health statistic read next
     to `vocab_growth`'s Heaps curve (Zipf 1949; natural text follows
     ``freq ∝ rank^{-s}`` with s ≈ 1, so a fitted slope far from −1
@@ -2757,11 +2739,11 @@ def zipf_fit(
     moments — identical literals both engines, round 6.
 
     Scale shape: ONE text scan → bigram explode → map-side-combined
-    gram counts; the rank is the only total order —
-    ``profile="oracle"`` a single window, ``profile="scale"``
-    ``ranked_by_range`` on (−freq, gram) (value-identical, pinned);
-    the moments are ONE map-side-combined global aggregate; output is
-    one row. No joins, no corpus-sized window.
+    gram counts; the rank is the only total order, taken with
+    ``ranked_by_range`` on (−freq, gram) because a global ``Window``
+    would sort the whole vocabulary in one task; the moments are ONE
+    map-side-combined global aggregate; output is one row. No joins,
+    no corpus-sized window.
 
     Output: (n_types, n_tokens, slope, intercept, r2) — counts
     BIGINT; slope/intercept/r2 DOUBLE round 6, NULL when the fit is
@@ -2782,24 +2764,12 @@ def zipf_fit(
         .groupBy("gram")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    if profile == "scale":
-        from scholar_stream_spark.operators.relational import (
-            ranked_by_range,
-        )
-
-        ranked = ranked_by_range(
-            freq.withColumn("_negc", -F.col("cnt")),
-            [],
-            ["_negc", "gram"],
-            rank_col="_rk",
-        )
-    elif profile == "oracle":
-        w = Window.orderBy(F.desc("cnt"), F.asc("gram"))
-        ranked = freq.select(
-            "cnt", F.row_number().over(w).alias("_rk")
-        )
-    else:
-        raise ValueError(f"zipf_fit: unknown profile {profile!r}")
+    ranked = ranked_by_range(
+        freq.withColumn("_negc", -F.col("cnt")),
+        [],
+        ["_negc", "gram"],
+        rank_col="_rk",
+    )
     # per-term quantized decimal moments (see docstring)
     q = "CAST(round(ln(CAST({v} AS DOUBLE)), 9) AS DECIMAL(12,9))"
     x, y = q.format(v="_rk"), q.format(v="cnt")

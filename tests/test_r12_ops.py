@@ -1,6 +1,6 @@
 """Round-12 operators: shipping-delay profile wiring, PQ recount
-agreement, BM25 whitespace tokenization, and the rank-exact family's
-distributed scale profile.
+agreement, BM25 whitespace tokenization, ``ranked_by_range`` against
+the window row number, and ``window_rank_suite``'s ntile edges.
 
 The shipping_delay_profile fixture is CONSTRUCTED (known lags, odd and
 even strata sizes) so the rank-selection arithmetic — median at row
@@ -228,65 +228,35 @@ def test_ranked_by_range_matches_window_global(spark):
     assert got == want
 
 
-@pytest.fixture(scope="module")
-def sf_small_tables(spark):
-    return {
-        t: spark.read.parquet(f"{SF_SMALL}/{t}.parquet")
-        for t in ("events", "orders", "documents")
-    }
-
-
-def test_mad_outliers_scale_profile_identical(sf_small_tables):
-    ev = sf_small_tables["events"]
-    assert _rows(relational.mad_outliers(ev, profile="scale")) == _rows(
-        relational.mad_outliers(ev)
-    )
-
-
-def test_rfm_segments_scale_profile_identical(sf_small_tables):
-    od = sf_small_tables["orders"]
-    assert _rows(relational.rfm_segments(od, profile="scale")) == _rows(
-        relational.rfm_segments(od)
-    )
-
-
-def test_revenue_concentration_scale_profile_identical(spark, sf_small_tables):
-    od = sf_small_tables["orders"]
-    cust = spark.read.parquet(f"{SF_SMALL}/customer.parquet")
-    nat = spark.read.parquet(f"{SF_SMALL}/nation.parquet")
-    assert _rows(
-        relational.revenue_concentration(od, cust, nat, profile="scale")
-    ) == _rows(relational.revenue_concentration(od, cust, nat))
-
-
-def test_window_rank_suite_scale_profile_identical(sf_small_tables):
-    ev = sf_small_tables["events"]
-    assert _rows(
-        relational.window_rank_suite(ev, profile="scale")
-    ) == _rows(relational.window_rank_suite(ev))
-
-
 def test_window_rank_suite_scale_ntile_edges(spark):
     """ntile's uneven split (first n%t tiles get one extra row) and
-    tiny partitions (n < t, single row) must match SQL NTILE exactly."""
+    tiny partitions (n < t, single row) match SQL NTILE exactly, and
+    the tie-safe functions give every peer the same value."""
     rows = [(i, "a", float(i % 3)) for i in range(10)]  # n=10, t=4
     rows += [(100 + i, "b", float(i)) for i in range(3)]  # n=3 < t
     rows += [(200, "c", 1.0)]  # n=1
     ev = spark.createDataFrame(
         rows, "event_id long, event_type string, value double"
     )
-    assert _rows(
-        relational.window_rank_suite(ev, profile="scale")
-    ) == _rows(relational.window_rank_suite(ev))
-
-
-def test_quality_deciles_scale_profile_identical(sf_small_tables):
-    from scholar_stream_spark.operators import curation
-
-    docs = sf_small_tables["documents"]
-    assert _rows(curation.quality_deciles(docs, profile="scale")) == _rows(
-        curation.quality_deciles(docs)
-    )
+    # a: peers {0,3,6,9}=0.0, {1,4,7}=1.0, {2,5,8}=2.0; ntile(4) over
+    # (value, event_id) splits the 10 rows 3-3-2-2
+    a_stats = {
+        0.0: (1, 1, 0.0, 0.4),
+        1.0: (5, 2, 0.444444, 0.7),
+        2.0: (8, 3, 0.777778, 1.0),
+    }
+    a_tile = {0: 1, 3: 1, 6: 1, 9: 2, 1: 2, 4: 2, 7: 3, 2: 3, 5: 4, 8: 4}
+    want = [
+        (i, "a", float(i % 3), *a_stats[float(i % 3)], a_tile[i])
+        for i in range(10)
+    ]
+    want += [
+        (100, "b", 0.0, 1, 1, 0.0, 0.333333, 1),
+        (101, "b", 1.0, 2, 2, 0.5, 0.666667, 2),
+        (102, "b", 2.0, 3, 3, 1.0, 1.0, 3),
+        (200, "c", 1.0, 1, 1, 0.0, 1.0, 1),
+    ]
+    assert _rows(relational.window_rank_suite(ev)) == sorted(want)
 
 
 def _late_history(spark):

@@ -2,9 +2,9 @@
 
 Covers the r12 ADVICE fixes (ranked_by_range null keys are pinned in
 test_property_ranked_by_range; here: the PQ-index rotation-load error
-contract), the shipping_delay_profile scale profile, the
-fk_integrity_report single-scan fold, the hybrid-over-ANN serving
-entry, iterative OPQ, and the watermark re-sizing monitor.
+contract), the fk_integrity_report single-scan fold, the
+hybrid-over-ANN serving entry, iterative OPQ, and the watermark
+re-sizing monitor.
 """
 
 from __future__ import annotations
@@ -362,20 +362,6 @@ def test_pareto_parts_boundary_classes(spark):
     assert got["C"] == (7, 10.0, 0.1)
 
 
-def test_pareto_parts_scale_profile_identical(spark):
-    """profile=\"scale\" (prefix_sum_by_range — exact-decimal
-    distributed cumsum) classifies identically to the window form."""
-    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
-    a = sorted(map(tuple, relational.pareto_parts(li).collect()))
-    b = sorted(
-        map(
-            tuple,
-            relational.pareto_parts(li, profile="scale").collect(),
-        )
-    )
-    assert a == b and len(a) > 0
-
-
 def test_prefix_sum_by_range_integer_path(spark):
     """The bigint branch (exact int addition, bigint output) matches
     the window cumsum; nulls add as zero on both paths."""
@@ -512,24 +498,3 @@ def test_lang_mix_by_source_counts_and_agreement(spark):
     assert got[("web", "en")] == (2, 0.666667, 1.0)
     assert got[("web", "es")] == (1, 0.333333, 1.0)
     assert got[("books", "und")] == (1, 1.0, 0.0)
-
-
-def test_shipping_delay_profile_scale_identical(spark):
-    """The 16th scale-profile pair: shipping_delay_profile's 5-key
-    priority window (the last single-task rank in the family) swapped
-    onto ranked_by_range — value-identical to the oracle profile."""
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
-    a = sorted(
-        tuple(r)
-        for r in relational.shipping_delay_profile(
-            orders, lineitem
-        ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in relational.shipping_delay_profile(
-            orders, lineitem, profile="scale"
-        ).collect()
-    )
-    assert a == b and len(a) > 0

@@ -277,9 +277,7 @@ def documents(spark):
 def test_zipf_scale_profile_value_identical(documents):
     from scholar_stream_spark.operators import textops
 
-    a = textops.zipf_fit(documents, profile="oracle").collect()
-    b = textops.zipf_fit(documents, profile="scale").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    a = textops.zipf_fit(documents).collect()
     assert len(a) == 1 and a[0]["slope"] is not None
     # a natural-ish corpus fits a DECREASING power law
     assert a[0]["slope"] < 0
@@ -562,23 +560,6 @@ def events(spark):
     return spark.read.parquet(f"{SF_SMALL}/events.parquet")
 
 
-def test_session_concurrency_profiles_identical(events):
-    from scholar_stream_spark.operators import temporal
-
-    a = sorted(
-        map(tuple, temporal.session_concurrency(events).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            temporal.session_concurrency(
-                events, profile="scale"
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) > 0
-
-
 def test_session_concurrency_invariants(events):
     """Sweep-line bookkeeping: total_us spans exactly first→last change
     point, level 0 exists (the stream has idle gaps), and the max
@@ -630,8 +611,6 @@ def test_session_concurrency_rejects_degenerate(events):
 
     with pytest.raises(ValueError, match="gap_seconds"):
         temporal.session_concurrency(events, gap_seconds=0)
-    with pytest.raises(ValueError, match="profile"):
-        temporal.session_concurrency(events, profile="bogus")
 
 
 # ---------------------------------------------------------------
